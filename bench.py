@@ -2,12 +2,18 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Output contract (round 8, fixing the r07 tail-truncation): stdout carries the
-full record {"metric", "value", "unit", "queries", "sf", "protocol"} on its
-penultimate line, and a COMPACT summary {"metric", "value", "unit", "sf"}
-(no per-query dict, always < 200 bytes) as the LAST line, so a bounded
-stdout tail-capture window always contains a parseable record even as the
-headline set grows. The full record is also written to BENCH_full.json.
+Output contract: one ``query_time`` line per query as it completes, then
+three trailing JSON lines, in this order:
+
+1. the full record {"metric", "value", "unit", "queries", "sf", "protocol",
+   ...}, also written to BENCH_full.json;
+2. ``per_query_top``: the largest-first subset of per-query timings that
+   fits a bounded byte budget (``per_query_top_line``);
+3. a COMPACT summary {"metric", "value", "unit", "sf"} (no per-query dict,
+   always < 200 bytes) as the LAST line.
+
+A bounded stdout tail-capture window therefore always holds a parseable
+summary and a per-query record, however large the headline set grows.
 
 Timing protocol: each query is executed with a count() action (full
 pipeline, no driver-side result materialization beyond the aggregate) after
@@ -360,6 +366,8 @@ def futex_wakeup_us(n: int = 15000, budget_s: float = 0.5) -> float:
     state["stop"] = True
     e1.set()
     t.join()
+    if not done:  # n <= 0: no round-trip ran, nothing to average
+        return 0.0
     return elapsed / done * 1e6
 
 

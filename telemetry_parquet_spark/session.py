@@ -86,6 +86,9 @@ def _sweep_dead_session_dirs(base: str) -> None:
             os.kill(int(name), 0)
         except ProcessLookupError:
             shutil.rmtree(os.path.join(base, name), ignore_errors=True)
+        except OverflowError:
+            # all digits but too large for a pid_t: not a session dir
+            continue
         except OSError:
             # PermissionError etc.: owner may be alive under another uid
             continue

@@ -5,12 +5,9 @@ whole line of development.
 A branch is its own manifest chain (``_manifests/branch-<name>-NNNNNN
 .json``) forked from a main version: the fork manifest COPIES the base
 version's file list, so branch reads never depend on main manifests that
-retention might expire. Branch commits write data files under the shared
-``data/`` tree and reference main-history files BY REFERENCE, exactly
-like main commits — an append costs its appended bytes, a COW delete its
-affected files, never the table. Main readers (head reads, time travel,
-SQL front door, CDC, the scan planner) cannot observe a branch by
-construction: they only ever resolve ``v%06d.json`` manifests.
+retention might expire. Main readers (head reads, time travel, SQL front
+door, CDC, the scan planner) cannot observe a branch by construction:
+they only ever resolve ``v%06d.json`` manifests.
 
 Merging back is metadata-only, with the same two regimes as WAP publish:
 
@@ -21,22 +18,27 @@ Merging back is metadata-only, with the same two regimes as WAP publish:
   branch commit is an APPEND (new files commute with the interleaved
   main commits — the Iceberg cherry-pick rule); the merged version is
   main-head files ∪ branch-added files, with the branch's new rows
-  re-validated against the CURRENT head's CHECK constraints. A branch
+  re-validated against the CURRENT head's CHECK constraints and UNIQUE
+  keys (the probe's audit rides into the merge commit). A branch
   containing a delete/rewrite does NOT commute and the merge refuses —
   callers re-fork rather than silently lose either side's rows.
 
-Partition specs: the fork copies the base version's spec + spec history
-+ per-file tuples, branch appends write through the spec-aware
-partitioned writer (``partition_spec.write_partitioned_files``), and
-both merge regimes carry the branch-landed tuples into the merged main
+Partition specs: the fork-time spec governs branch appends, and both
+merge regimes carry the branch-landed tuples into the merged main
 version — so tuple pruning, partition rollups, and bucket-aligned joins
 keep engaging after a WAP-via-branch land -> audit -> merge lifecycle.
-Branch COW deletes drop the rewritten files' tuples (min/max pruning
-takes over), exactly like main COW.
 
 Branch data files are pinned against ``vacuum`` while the branch exists
 (snapshots.py::vacuum unions branch-manifest references into the live
 set); ``delete_branch`` unpins, and the next vacuum reclaims.
+
+Branch commits run on the same DML core as main and staged commits
+(sources/snapshots.py): ``branch_append`` validates and writes through
+``_append_files`` and ``branch_delete_where`` rewrites through
+``_cow_delete``; only the landing target differs — ``_branch_commit``
+writes a branch manifest via the shared ``_write_manifest``, and
+``merge_branch`` lands a rebase through ``_land_append``, the rule WAP
+publish uses.
 
 Reference parity: nothing like this in the reference — its derived
 datasets are republished wholesale per day (views/MainEventsView.scala:55
@@ -50,7 +52,6 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from telemetry_parquet_spark.sources import snapshots as S
@@ -92,50 +93,32 @@ def read_branch_manifest(root: str, name: str, n: int | None = None) -> dict:
         return json.load(f)
 
 
-def _write_branch_manifest(root: str, name: str, n: int, m: dict) -> int:
-    fd = os.open(
-        _bpath(root, name, n), os.O_CREAT | os.O_EXCL | os.O_WRONLY
+def _branch_commit(
+    root: str,
+    name: str,
+    n: int,
+    action: str,
+    base: int,
+    files: list[str],
+    schema_json: str,
+    pm: dict,
+    extra: dict,
+) -> int:
+    """Land a write as branch commit ``n`` over parent manifest ``pm``
+    (the fork base or the previous branch commit). The manifest body is
+    main's (``snapshots._write_manifest``); vectors, CHECK constraints
+    and UNIQUE keys from ``pm`` ride along."""
+    S._write_manifest(
+        root, _bpath(root, name, n),
+        {"branch": name, "n": n, "action": action, "base_version": base},
+        files, schema_json, pm,
+        {
+            **{k: pm[k] for k in ("dv", "constraints", "unique_keys")
+               if pm.get(k)},
+            **extra,
+        },
     )
-    with os.fdopen(fd, "w") as f:
-        json.dump(m, f)
     return n
-
-
-def _stats_sizes(
-    root: str, files: list[str], parent_m: dict
-) -> tuple[dict, dict, dict, dict, dict, dict]:
-    """Commit-time stats/sizes/row-counts for a branch manifest —
-    carried files reuse the parent BRANCH manifest's entries (same
-    discipline as snapshots._stats_from_parent_manifest, which walks the main
-    chain)."""
-    return S._stats_from_parent_manifest(root, files, parent_m)
-
-
-def _spec_meta(
-    parent_m: dict, files: list[str], new_parts: dict | None = None
-) -> dict:
-    """Partition-spec metadata for a branch manifest: the fork-time spec
-    and spec history ride every branch commit (same discipline as
-    snapshots._commit), carried files keep their recorded tuples, and a
-    spec-aware branch append contributes its new files' tuples. Without
-    this, a file landed on a branch of a spec'd table carries no
-    partition tuple and a later merge silently degrades tuple pruning /
-    bucket joins on main."""
-    in_commit = set(files)
-    partitions = {
-        f: e for f, e in (parent_m.get("partitions") or {}).items()
-        if f in in_commit
-    }
-    partitions.update(new_parts or {})
-    return {
-        **(
-            {"partition_spec": parent_m["partition_spec"]}
-            if parent_m.get("partition_spec")
-            else {}
-        ),
-        **({"specs": parent_m["specs"]} if parent_m.get("specs") else {}),
-        **({"partitions": partitions} if partitions else {}),
-    }
 
 
 def create_branch(
@@ -158,29 +141,10 @@ def create_branch(
             "equality deletes — the branch machinery does not thread "
             "their scopes through branch appends; compact_table first"
         )
-    import time as _time
-
-    fork = {
-        "branch": name,
-        "n": 0,
-        "action": "branch-fork",
-        "base_version": v,
-        "files": m["files"],
-        "schema": m["schema"],
-        "committed_at": _time.time(),
-        "stats": m.get("stats", {}),
-        "sizes": m.get("sizes", {}),
-        "rows": m.get("rows", {}),
-        "sums": m.get("sums", {}),
-        "nulls": m.get("nulls", {}),
-        **({"stats_types": m["stats_types"]} if m.get("stats_types") else {}),
-        **({"dv": m["dv"]} if m.get("dv") else {}),
-        **({"constraints": m["constraints"]} if m.get("constraints") else {}),
-        **({"unique_keys": m["unique_keys"]} if m.get("unique_keys") else {}),
-        **_spec_meta(m, m["files"]),
-        "append_only": True,
-    }
-    return _write_branch_manifest(root, name, 0, fork)
+    return _branch_commit(
+        root, name, 0, "branch-fork", v, m["files"], m["schema"], m,
+        {"append_only": True},
+    )
 
 
 def read_branch(
@@ -191,14 +155,8 @@ def read_branch(
     as on main."""
     bm = read_branch_manifest(root, name, n)
     schema = StructType.fromJson(json.loads(bm["schema"]))
-    if not bm["files"]:
-        return spark.createDataFrame([], schema)
-    if bm.get("dv"):
-        return S._scan_with_pos(
-            spark, root, bm["files"], schema, bm["dv"]
-        ).select(*[f.name for f in schema.fields])
-    return spark.read.schema(schema).parquet(
-        *[os.path.join(root, f) for f in bm["files"]]
+    return S._read_logical(
+        spark, root, bm["files"], schema, bm.get("dv"), None
     )
 
 
@@ -215,68 +173,18 @@ def branch_append(
     metadata (e.g. a streaming batch-id idempotence stamp) into the
     branch manifest atomically."""
     bm = read_branch_manifest(root, name)
-    S._check_column_types(
-        df, StructType.fromJson(json.loads(bm["schema"])), "branch_append"
-    )
-    table_cols = {
-        f.name
-        for f in StructType.fromJson(json.loads(bm["schema"])).fields
-    }
-    if set(df.columns) != table_cols:
-        raise ValueError(
-            f"branch_append: schema mismatch (df={sorted(df.columns)}, "
-            f"branch={sorted(table_cols)})"
-        )
-    S._validate_constraints(df, bm.get("constraints"))
-    unique_audit = S._validate_unique(spark, root, bm, df)
     n = bm["n"] + 1
-    spec = bm.get("partition_spec")
-    if spec:
-        # the fork-time spec governs branch writes too: tuples must
-        # survive the land -> audit -> merge (WAP-via-branch) lifecycle
-        from telemetry_parquet_spark.sources.partition_spec import (
-            write_partitioned_files,
-        )
-
-        new, new_parts = write_partitioned_files(
-            df, root, f"{_PREFIX}{name}-c{n:06d}", spec
-        )
-    else:
-        new = S._write_commit_files(df, root, f"{_PREFIX}{name}-c{n:06d}")
-        new_parts = {}
-    files = bm["files"] + new
-    stats, types, sizes, rows, sums, nulls = _stats_sizes(root, files, bm)
-    import time as _time
-
-    return _write_branch_manifest(
-        root, name, n,
+    # the fork-time spec governs branch writes too: tuples must survive
+    # the land -> audit -> merge (WAP-via-branch) lifecycle
+    new, parts, _, unique_audit = S._append_files(
+        spark, root, bm, df, f"{_PREFIX}{name}-c{n:06d}", "branch_append"
+    )
+    return _branch_commit(
+        root, name, n, "branch-append", bm["base_version"],
+        bm["files"] + new, bm["schema"], bm,
         {
-            "branch": name,
-            "n": n,
-            "action": "branch-append",
-            "base_version": bm["base_version"],
-            "files": sorted(files),
             "added_files": sorted(new),
-            "schema": bm["schema"],
-            "committed_at": _time.time(),
-            "stats": stats,
-            "sizes": sizes,
-            "rows": rows,
-            "sums": sums,
-            "nulls": nulls,
-            **({"stats_types": types} if types else {}),
-            **({"dv": bm["dv"]} if bm.get("dv") else {}),
-            **(
-                {"constraints": bm["constraints"]}
-                if bm.get("constraints")
-                else {}
-            ),
-            **(
-                {"unique_keys": bm["unique_keys"]}
-                if bm.get("unique_keys")
-                else {}
-            ),
-            **_spec_meta(bm, files, new_parts),
+            "partitions": parts,
             "append_only": bm.get("append_only", True),
             **unique_audit,
             **(extra or {}),
@@ -296,72 +204,16 @@ def branch_delete_where(
             "branch_delete_where: branch carries deletion vectors from "
             "its fork point; compact main before forking to mutate"
         )
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    hit = F.coalesce(pred, F.lit(False))
-    schema = StructType.fromJson(json.loads(bm["schema"]))
-    root_abs = os.path.abspath(root)
-
-    def _rel(p: str) -> str:
-        return S._rel_path(root_abs, p)
-
-    scan = spark.read.schema(schema).parquet(
-        *[os.path.join(root, f) for f in bm["files"]]
-    )
-    affected = {
-        _rel(r.file_path)
-        for r in scan.where(hit)
-        .select(F.col("_metadata.file_path").alias("file_path"))
-        .distinct()
-        .collect()
-    }
-    carried = [f for f in bm["files"] if f not in affected]
-    rewrite = [f for f in bm["files"] if f in affected]
     n = bm["n"] + 1
-    new: list[str] = []
-    if rewrite:
-        kept_rows = (
-            spark.read.schema(schema)
-            .parquet(*[os.path.join(root, f) for f in rewrite])
-            .where(~hit)
-        )
-        new = S._write_commit_files(
-            kept_rows, root, f"{_PREFIX}{name}-c{n:06d}"
-        )
-    files = carried + new
-    stats, types, sizes, rows, sums, nulls = _stats_sizes(root, files, bm)
-    import time as _time
-
-    return _write_branch_manifest(
-        root, name, n,
-        {
-            "branch": name,
-            "n": n,
-            "action": "branch-delete",
-            "base_version": bm["base_version"],
-            "files": sorted(files),
-            "schema": bm["schema"],
-            "committed_at": _time.time(),
-            "stats": stats,
-            "sizes": sizes,
-            "rows": rows,
-            "sums": sums,
-            "nulls": nulls,
-            **({"stats_types": types} if types else {}),
-            **(
-                {"constraints": bm["constraints"]}
-                if bm.get("constraints")
-                else {}
-            ),
-            **(
-                {"unique_keys": bm["unique_keys"]}
-                if bm.get("unique_keys")
-                else {}
-            ),
-            # COW-rewritten files lose their tuples (same as main COW)
-            # and fall back to min/max pruning; carried files keep theirs
-            **_spec_meta(bm, files),
-            "append_only": False,
-        },
+    files, _ = S._cow_delete(
+        spark, root, bm, predicate, f"{_PREFIX}{name}-c{n:06d}",
+        "branch_delete_where",
+    )
+    # COW-rewritten files lose their tuples (same as main COW) and fall
+    # back to min/max pruning; carried files keep theirs
+    return _branch_commit(
+        root, name, n, "branch-delete", bm["base_version"], files,
+        bm["schema"], bm, {"append_only": False},
     )
 
 
@@ -379,16 +231,17 @@ def merge_branch(
     bm = read_branch_manifest(root, name)
     head = S.latest_version(root)
     mh = S.read_manifest(root, head)
-    extra = {**S._carry_meta(mh), "branch": name, "merged_n": bm["n"]}
+    extra = {"branch": name, "merged_n": bm["n"]}
     bparts = bm.get("partitions") or {}
     if head == bm["base_version"]:
-        files, schema = bm["files"], bm["schema"]
+        extra = {**S._carry_meta(mh), **extra}
         if bm.get("dv"):
             extra["dv"] = bm["dv"]
         if bparts:  # branch-landed tuples survive the merge
-            extra["partitions"] = {
-                f: e for f, e in bparts.items() if f in set(files)
-            }
+            extra["partitions"] = bparts
+        v = S._commit(
+            root, "branch-merge", bm["files"], bm["schema"], head, extra
+        )
     else:
         if not bm.get("append_only", False):
             raise RuntimeError(
@@ -397,34 +250,24 @@ def merge_branch(
                 "non-append commits — they do not commute; re-fork and "
                 "replay"
             )
-        if mh["schema"] != bm["schema"]:
-            raise ValueError(
-                "merge_branch: main schema changed since the fork; "
-                "re-fork and replay"
-            )
         added: list[str] = []
         for k in range(1, bm["n"] + 1):
             added += read_branch_manifest(root, name, k).get(
                 "added_files", []
             )
-        if added:
-            schema_t = StructType.fromJson(json.loads(bm["schema"]))
-            new_rows = spark.read.schema(schema_t).parquet(
-                *[os.path.join(root, f) for f in added]
-            )
-            S._validate_constraints(new_rows, mh.get("constraints"))
-            # the rebase target may have gained keys since the fork
-            S._validate_unique(spark, root, mh, new_rows)
-        files, schema = mh["files"] + added, mh["schema"]
-        extra["rebased_from"] = bm["base_version"]
-        if mh.get("dv"):
-            extra["dv"] = mh["dv"]
-        if mh.get("eq"):  # branch-added files postdate every scope
-            extra["eq"] = mh["eq"]
-        added_parts = {f: bparts[f] for f in added if f in bparts}
-        if added_parts:  # main-head files keep their own via _commit
-            extra["partitions"] = added_parts
-    v = S._commit(root, "branch-merge", files, schema, head, extra)
+        schema = StructType.fromJson(json.loads(bm["schema"]))
+        new_rows = (
+            S._read_logical(spark, root, added, schema, None, None)
+            if added else None
+        )
+        # main-head files keep their own tuples via _commit
+        extra["partitions"] = {f: bparts[f] for f in added if f in bparts}
+        v = S._land_append(
+            spark, root, "branch-merge", head, mh, bm["base_version"],
+            added, bm["schema"], new_rows, extra,
+            "merge_branch: main schema changed since the fork; re-fork "
+            "and replay",
+        )
     if delete:
         delete_branch(root, name)
     return v

@@ -30,6 +30,19 @@ public table formats (Iceberg's snapshot list, Delta's commit log) do:
   reads anti-join it out; ``compact_table`` materializes outstanding
   vectors; COW mutators refuse to run over them).
 
+One DML core, three landing targets. Each write capability has exactly
+one private implementation: ``_append_files`` validates an appended batch
+and writes its files (spec-aware under a partition spec); ``_mor_write``
+computes a merge-on-read match (deletion vector, its agg sidecar and, for
+updates, the updated copies); ``_cow_delete`` finds the affected files
+and rewrites them; ``_write_manifest`` builds the manifest body (stats,
+sizes, rows, sums, nulls, partition tuples, spec) over the one ``O_EXCL``
+writer ``_write_json_excl``; ``_land_append`` is the append-rebase rule;
+``_read_logical`` is the logical read. A public mutator only chooses
+where its result lands: a numbered version (``_commit``), a staged
+``wap-<id>`` manifest (``_stage``), or a branch manifest
+(``branches._branch_commit``).
+
 Scale: a manifest is file-list-sized (the object every table format
 materializes — at 10^6+ files Iceberg splits it into avro manifest
 files per partition; the JSON here is the same structure one level
@@ -276,9 +289,8 @@ def _file_column_sums(path: str) -> dict[str, list]:
 def _stats_from_parent_manifest(
     root: str, files: list[str], pm: dict
 ) -> tuple[dict, dict, dict, dict, dict, dict]:
-    """The reuse loop shared with branch commits (branches.py passes the
-    parent BRANCH manifest dict) — one implementation, so a stats or
-    size-backfill fix can never drift between main and branch chains.
+    """Per-file manifest entries for ``files``, reusing the parent
+    manifest ``pm`` (a version or a branch commit) for carried files.
     Returns (stats, types, sizes, rows, sums, nulls); ``rows`` records each
     file's exact footer row count so COUNT(*) answers from the manifest
     alone (``snapshot_row_count``); ``sums`` records each file's integer
@@ -346,49 +358,54 @@ def _stats_from_parent_manifest(
     return stats, types, sizes, rows, sums, nulls
 
 
-def _commit(root: str, action: str, files: list[str], schema_json: str,
-            parent: int | None, extra: dict | None = None) -> int:
-    """Atomically write the next manifest. ``O_EXCL`` makes the commit
-    the linearization point: if another writer took this version number
-    first, the open fails and the caller retries against the new head.
-    ``extra`` rides application metadata into the manifest atomically —
-    e.g. the streaming sink's (stream, batch_id) idempotence stamp.
-    Every commit also records per-file column min/max (``stats``) so the
-    planner can prune from the manifest alone.
+def _write_json_excl(path: str, obj: dict) -> None:
+    """Create ``path`` holding ``obj`` as JSON, failing if it exists: the
+    one ``O_CREAT|O_EXCL`` writer behind version, tag, staged and branch
+    manifests — the atomic put-if-absent every commit linearizes on."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+    with os.fdopen(fd, "w") as f:
+        json.dump(obj, f)
+
+
+def _write_manifest(
+    root: str,
+    path: str,
+    header: dict,
+    files: list[str],
+    schema_json: str,
+    pm: dict,
+    extra: dict | None = None,
+) -> None:
+    """Write one commit manifest — a numbered version or a branch commit
+    — at ``path``: ``header`` (the target's own keys and the action), the
+    sorted file list and schema, the per-file body derived from the
+    parent manifest ``pm``, then ``extra``. Every commit records per-file
+    column min/max (``stats``) so the planner can prune from the
+    manifest alone.
 
     Partition-spec metadata (partition_spec.py) is TABLE-level and
     rides every commit implicitly: the current spec + spec history are
     copied from the parent (an ``extra`` entry — from
     ``set_partition_spec`` — wins), and carried files keep their
-    recorded partition tuples exactly like their stats entries; files a
-    commit rewrites (COW, compaction) simply lose theirs and fall back
-    to min/max pruning."""
+    recorded partition tuples exactly like their stats entries; an
+    ``extra["partitions"]`` entry adds the tuples of freshly written
+    files; files a commit rewrites (COW, compaction) simply lose theirs
+    and fall back to min/max pruning."""
     import time as _time
 
-    version = 0 if parent is None else parent + 1
-    pm = {}
-    if parent is not None:
-        try:
-            pm = read_manifest(root, parent)
-        except FileNotFoundError:
-            pass
+    extra = dict(extra or {})
     stats, stats_types, sizes, rows, sums, nulls = (
         _stats_from_parent_manifest(root, files, pm)
     )
-    extra = dict(extra or {})
     in_commit = set(files)
     partitions = {
         f: e for f, e in (pm.get("partitions") or {}).items()
         if f in in_commit
     }
     partitions.update(extra.pop("partitions", None) or {})
-    spec_meta = {
-        k: pm[k] for k in ("partition_spec", "specs") if k in pm
-    }
-    manifest = {
-        "version": version,
-        "parent": parent,
-        "action": action,
+    _write_json_excl(path, {
+        **header,
         "files": sorted(files),
         "schema": schema_json,
         "committed_at": _time.time(),
@@ -399,16 +416,31 @@ def _commit(root: str, action: str, files: list[str], schema_json: str,
         "nulls": nulls,
         **({"stats_types": stats_types} if stats_types else {}),
         **({"partitions": partitions} if partitions else {}),
-        **spec_meta,
+        **{k: pm[k] for k in ("partition_spec", "specs") if k in pm},
         **extra,
-    }
-    os.makedirs(os.path.join(root, _MANIFEST_DIR), exist_ok=True)
-    fd = os.open(
-        _manifest_path(root, version),
-        os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+    })
+
+
+def _commit(root: str, action: str, files: list[str], schema_json: str,
+            parent: int | None, extra: dict | None = None) -> int:
+    """Atomically write the next numbered version. ``O_EXCL`` makes the
+    commit the linearization point: if another writer took this version
+    number first, the open fails and the caller retries against the new
+    head. ``extra`` rides application metadata into the manifest
+    atomically — e.g. the streaming sink's (stream, batch_id)
+    idempotence stamp."""
+    version = 0 if parent is None else parent + 1
+    pm = {}
+    if parent is not None:
+        try:
+            pm = read_manifest(root, parent)
+        except FileNotFoundError:
+            pass
+    _write_manifest(
+        root, _manifest_path(root, version),
+        {"version": version, "parent": parent, "action": action},
+        files, schema_json, pm, extra,
     )
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f)
     return version
 
 
@@ -434,6 +466,22 @@ def _write_commit_files(df: DataFrame, root: str, version_tag: str) -> list[str]
                 full = os.path.join(dirpath, name)
                 rel.append(os.path.relpath(full, root))
     return rel
+
+
+def _write_files(
+    df: DataFrame, root: str, tag: str, spec: dict | None, **layout
+) -> tuple[list[str], dict]:
+    """Write ``df`` under ``tag``: ``_write_commit_files``, or the
+    spec-aware writer (``partition_spec.write_partitioned_files``, which
+    ``layout`` z-order options pass through to) when the table carries a
+    partition spec. Returns (rel files, {rel file: partition tuple})."""
+    if not spec:
+        return _write_commit_files(df, root, tag), {}
+    from telemetry_parquet_spark.sources.partition_spec import (
+        write_partitioned_files,
+    )
+
+    return write_partitioned_files(df, root, tag, spec, **layout)
 
 
 def create_table(root: str, schema: StructType) -> int:
@@ -581,16 +629,9 @@ def _validate_unique(
         # the probe must see the LOGICAL table: a key masked by an
         # outstanding deletion vector is absent, and treating it as
         # existing would falsely reject a legitimate re-insert
-        if m.get("dv") or m.get("eq"):
-            existing = _read_logical(
-                spark, root, candidates, schema, m.get("dv"), m.get("eq")
-            ).select(*cols)
-        else:
-            existing = (
-                spark.read.schema(schema)
-                .parquet(*[os.path.join(root, f) for f in candidates])
-                .select(*cols)
-            )
+        existing = _read_logical(
+            spark, root, candidates, schema, m.get("dv"), m.get("eq")
+        ).select(*cols)
         if (
             existing.join(keys.distinct(), on=list(cols), how="left_semi")
             .limit(1).count()
@@ -601,6 +642,59 @@ def _validate_unique(
                 "to upsert)"
             )
     return {"unique_scan": audit} if audit else {}
+
+
+def _append_files(
+    spark: SparkSession,
+    root: str,
+    m: dict,
+    df: DataFrame,
+    tag: str,
+    op: str,
+    allow_evolution: bool | None = None,
+    unique: bool = True,
+) -> tuple[list[str], dict, str, dict]:
+    """Validate an appended batch against manifest ``m`` (a version or a
+    branch head), then write it under ``tag``. Checks run before a byte
+    is written: column types, the column set, CHECK constraints over the
+    new rows and — with ``unique`` — the UNIQUE-key probe.
+    ``allow_evolution`` (None where the caller offers no evolution)
+    widens the schema to the union of columns; old files are never
+    rewritten, so they surface the new columns as NULL. Files are laid
+    out by ``m``'s partition spec, so staged and branch files keep their
+    tuples through publication and merges. Returns (new files, their
+    partition tuples, the schema json to commit, the ``unique_scan``
+    audit)."""
+    table_schema = StructType.fromJson(json.loads(m["schema"]))
+    table_cols = [f.name for f in table_schema.fields]
+    schema_json = m["schema"]
+    _check_column_types(df, table_schema, op)
+    if set(df.columns) != set(table_cols):
+        if not allow_evolution:
+            side = "branch" if "branch" in m else "table"
+            hint = (
+                "" if allow_evolution is None
+                else "; pass allow_evolution=True to add columns"
+            )
+            raise ValueError(
+                f"{op}: schema mismatch (df={sorted(df.columns)}, "
+                f"{side}={sorted(table_cols)}){hint}"
+            )
+        evolved = StructType(list(table_schema.fields))
+        for f_ in df.schema.fields:
+            if f_.name not in set(table_cols):
+                evolved.add(f_)
+        for c in table_cols:
+            if c not in set(df.columns):
+                df = df.withColumn(
+                    c, F.lit(None).cast(table_schema[c].dataType)
+                )
+        df = df.select(*[f.name for f in evolved.fields])
+        schema_json = evolved.json()
+    _validate_constraints(df, m.get("constraints"))
+    audit = _validate_unique(spark, root, m, df) if unique else {}
+    new, parts = _write_files(df, root, tag, m.get("partition_spec"))
+    return new, parts, schema_json, audit
 
 
 def _rel_path(root_abs: str, p: str) -> str:
@@ -683,9 +777,18 @@ def _read_logical(
     nest, so there are at most len(eq)+1 groups. Each eq key set
     broadcasts (delete-batch-sized by design). ``keep_pos`` keeps the
     ``__file``/``__pos`` columns for callers that stack further
-    vectors."""
+    vectors. The one logical read: heads, staged and branch views, the
+    UNIQUE probe and the MOR match all go through here. With no dv/eq
+    it is a plain scan; an empty ``files`` list is an empty frame."""
     cols = [f.name for f in schema.fields]
     out_cols = cols + (["__file", "__pos"] if keep_pos else [])
+    if not files:
+        empty = spark.createDataFrame([], schema)
+        return empty.select(
+            "*",
+            F.lit(None).cast("string").alias("__file"),
+            F.lit(None).cast("long").alias("__pos"),
+        ) if keep_pos else empty
     eq = eq or []
 
     def _base(grp: list[str]) -> DataFrame:
@@ -735,14 +838,9 @@ def read_snapshot(
     v = latest_version(root) if version is None else version
     m = read_manifest(root, v)
     schema = StructType.fromJson(json.loads(m["schema"]))
-    if not m["files"]:
-        return spark.createDataFrame([], schema)
-    if m.get("dv") or m.get("eq"):
-        return _read_logical(
-            spark, root, m["files"], schema, m.get("dv"), m.get("eq")
-        )
-    paths = [os.path.join(root, f) for f in m["files"]]
-    return spark.read.schema(schema).parquet(*paths)
+    return _read_logical(
+        spark, root, m["files"], schema, m.get("dv"), m.get("eq")
+    )
 
 
 def snapshot_row_count(root: str, version: int | str | None = None) -> int:
@@ -882,14 +980,11 @@ def _write_dv_agg_sidecar(
         f.name for f in schema.fields
         if f.dataType.typeName() in ("long", "integer", "short", "byte")
     ]
-    if "__file" not in matched.columns:  # empty-table staged vector:
-        per_rows = []                    # masks nothing, zero sidecar
-    else:
-        per_rows = matched.groupBy("__file").agg(
-            F.count(F.lit(1)).alias("__n"),
-            *[F.sum(F.col(c).cast("long")).alias(f"s_{c}") for c in cols],
-            *[F.count(F.col(c)).alias(f"n_{c}") for c in cols],
-        ).collect()
+    per_rows = matched.groupBy("__file").agg(
+        F.count(F.lit(1)).alias("__n"),
+        *[F.sum(F.col(c).cast("long")).alias(f"s_{c}") for c in cols],
+        *[F.count(F.col(c)).alias(f"n_{c}") for c in cols],
+    ).collect()
     per_file = {
         r["__file"]: {
             "n": int(r["__n"]),
@@ -1321,55 +1416,22 @@ def append(
     new files are laid out by the spec's transforms and the manifest
     records each file's exact partition tuple; appends before the spec
     (and rewrite commits) stay as-is and prune by min/max stats."""
-    meta = {}
-    spec = None
     try:
         parent = latest_version(root)
-        m = read_manifest(root, parent)
-        carried, schema_json = m["files"], m["schema"]
-        spec = m.get("partition_spec")
-        _validate_constraints(df, m.get("constraints"))
-        meta = {**_carry_meta(m), **_validate_unique(spark, root, m, df)}
-        if m.get("dv"):  # outstanding deletion vectors stay in force
-            meta["dv"] = m["dv"]
-        if m.get("eq"):  # appended files are outside every eq scope
-            meta["eq"] = m["eq"]
-        table_schema = StructType.fromJson(json.loads(schema_json))
-        table_cols = [f.name for f in table_schema.fields]
-        _check_column_types(df, table_schema, "append")
-        if set(df.columns) != set(table_cols):
-            if not allow_evolution:
-                raise ValueError(
-                    f"append: schema mismatch (df={sorted(df.columns)}, "
-                    f"table={sorted(table_cols)}); pass "
-                    "allow_evolution=True to add columns"
-                )
-            evolved = StructType(list(table_schema.fields))
-            for f_ in df.schema.fields:
-                if f_.name not in set(table_cols):
-                    evolved.add(f_)
-            missing = [c for c in table_cols if c not in set(df.columns)]
-            for c in missing:
-                df = df.withColumn(c, F.lit(None).cast(table_schema[c].dataType))
-            df = df.select(*[f.name for f in evolved.fields])
-            schema_json = evolved.json()
     except FileNotFoundError:
         parent = create_table(root, df.schema)
-        carried, schema_json = [], df.schema.json()
-    if spec:
-        from telemetry_parquet_spark.sources.partition_spec import (
-            write_partitioned_files,
-        )
-
-        new, parts = write_partitioned_files(
-            df, root, f"c{parent + 1:06d}", spec
-        )
-        meta = {**meta, "partitions": parts}
-    else:
-        new = _write_commit_files(df, root, f"c{parent + 1:06d}")
+    m = read_manifest(root, parent)
+    new, parts, schema_json, audit = _append_files(
+        spark, root, m, df, f"c{parent + 1:06d}", "append", allow_evolution
+    )
+    meta = {**_carry_meta(m), **audit}
+    if m.get("dv"):  # outstanding deletion vectors stay in force
+        meta["dv"] = m["dv"]
+    if m.get("eq"):  # appended files are outside every eq scope
+        meta["eq"] = m["eq"]
     return _commit(
-        root, "append", carried + new, schema_json, parent,
-        {**meta, **(extra or {})},
+        root, "append", m["files"] + new, schema_json, parent,
+        {**meta, "partitions": parts, **(extra or {})},
     )
 
 
@@ -1391,6 +1453,79 @@ def _require_no_dv(m: dict, op: str) -> None:
             f"({len(m['eq'])} key sets); run compact_table to "
             "materialize them first"
         )
+
+
+def _mor_write(
+    spark: SparkSession,
+    root: str,
+    m: dict,
+    predicate,
+    tag: str,
+    op: str,
+    assignments: dict[str, object] | None = None,
+) -> tuple[list[str], list[str], dict]:
+    """The merge-on-read match against manifest ``m``'s LOGICAL view
+    (its vectors and equality deletes applied, so positions never
+    duplicate across vectors; NULL predicate = no match, SQL semantics).
+    Writes the deletion vector of matched (file, pos) and its agg
+    sidecar. With ``assignments`` (column -> Column or SQL expression
+    string, cast to the column's type) it also writes the matched rows'
+    updated copies, spec-aware and checked against the CHECK
+    constraints before anything is written. A delete's vector lands
+    under ``tag``; an update's copies under ``tag`` and its vector under
+    ``tag + "dv"``. Returns (vector files, copy files, copy tuples)."""
+    schema = StructType.fromJson(json.loads(m["schema"]))
+    cols = [f.name for f in schema.fields]
+    if assignments is not None:
+        bad = set(assignments) - set(cols)
+        if bad:
+            raise ValueError(f"{op}: unknown columns {sorted(bad)}")
+        for uname, ucols in (m.get("unique_keys") or {}).items():
+            touched = set(assignments) & set(ucols)
+            if touched:
+                raise ValueError(
+                    f"{op}: SET touches UNIQUE key '{uname}' "
+                    f"columns {sorted(touched)}; use merge_into for key "
+                    "changes"
+                )
+    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+    matched = _read_logical(
+        spark, root, m["files"], schema, m.get("dv"), m.get("eq"),
+        keep_pos=True,
+    ).where(F.coalesce(pred, F.lit(False)))
+    dv_rows = matched.select(
+        F.col("__file").alias("file"), F.col("__pos").alias("pos")
+    )
+    dv_tag = tag if assignments is None else tag + "dv"
+    if assignments is not None:
+        updated = matched.select(
+            *[
+                (
+                    F.expr(assignments[c]).cast(schema[c].dataType).alias(c)
+                    if isinstance(assignments.get(c), str)
+                    else assignments[c].cast(schema[c].dataType).alias(c)
+                    if c in assignments
+                    else F.col(c)
+                )
+                for c in cols
+            ]
+        )
+        _validate_constraints(updated, m.get("constraints"))
+    # repartition (not coalesce): the detection scan stays parallel and
+    # only the matched POSITIONS shuffle to one writer. One DV file per
+    # commit — a delete big enough for that to matter is better served
+    # by the COW path (the formats make the same size-based call).
+    new_dv = _write_commit_files(dv_rows.repartition(1), root, dv_tag)
+    _write_dv_agg_sidecar(spark, root, new_dv, matched, schema)
+    if assignments is None:
+        return new_dv, [], {}
+    # the updated copies carry tuples too (derived from their NEW
+    # values), so the DV-aware partition rollup and the bucket join stay
+    # engaged through MOR updates
+    new_files, parts = _write_files(
+        updated, root, tag, m.get("partition_spec")
+    )
+    return new_dv, new_files, parts
 
 
 def delete_where_mor(
@@ -1415,30 +1550,15 @@ def delete_where_mor(
     (``_require_no_dv``). NULL predicate = no match, SQL semantics."""
     parent = latest_version(root)
     m = read_manifest(root, parent)
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    hit = F.coalesce(pred, F.lit(False))
     meta = {**_carry_meta(m), **({"dv": m["dv"]} if m.get("dv") else {}),
         **({"eq": m["eq"]} if m.get("eq") else {})}
     if not m["files"]:
         return _commit(
             root, "delete-mor", [], m["schema"], parent, meta
         )
-    schema = StructType.fromJson(json.loads(m["schema"]))
-    matched = _read_logical(
-        spark, root, m["files"], schema, m.get("dv"), m.get("eq"),
-        keep_pos=True,
-    ).where(hit)
-    matches = matched.select(
-        F.col("__file").alias("file"), F.col("__pos").alias("pos")
+    new_dv, _, _ = _mor_write(
+        spark, root, m, predicate, f"dv{parent + 1:06d}", "delete_where_mor"
     )
-    # repartition (not coalesce): the detection scan stays parallel and
-    # only the matched POSITIONS shuffle to one writer. One DV file per
-    # delete commit — a delete big enough for that to matter is better
-    # served by the COW path (the formats make the same size-based call).
-    new_dv = _write_commit_files(
-        matches.repartition(1), root, f"dv{parent + 1:06d}"
-    )
-    _write_dv_agg_sidecar(spark, root, new_dv, matched, schema)
     return _commit(
         root, "delete-mor", m["files"], m["schema"], parent,
         {**meta, "dv": meta.get("dv", []) + new_dv},
@@ -1466,65 +1586,16 @@ def update_where_mor(
         return _commit(
             root, "update-mor", [], m["schema"], parent, _carry_meta(m)
         )
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    hit = F.coalesce(pred, F.lit(False))
-    schema = StructType.fromJson(json.loads(m["schema"]))
-    cols = [f.name for f in schema.fields]
-    bad = set(assignments) - set(cols)
-    if bad:
-        raise ValueError(f"update_where_mor: unknown columns {sorted(bad)}")
-    for uname, ucols in (m.get("unique_keys") or {}).items():
-        touched = set(assignments) & set(ucols)
-        if touched:
-            raise ValueError(
-                f"update_where_mor: SET touches UNIQUE key '{uname}' "
-                f"columns {sorted(touched)}; use merge_into for key "
-                "changes"
-            )
-    matched = _read_logical(
-        spark, root, m["files"], schema, m.get("dv"), m.get("eq"),
-        keep_pos=True,
-    ).where(hit)
-    dv_rows = matched.select(
-        F.col("__file").alias("file"), F.col("__pos").alias("pos")
+    new_dv, new_files, parts = _mor_write(
+        spark, root, m, predicate, f"u{parent + 1:06d}", "update_where_mor",
+        assignments,
     )
-    updated = matched.select(
-        *[
-            (
-                F.expr(assignments[c]).cast(schema[c].dataType).alias(c)
-                if isinstance(assignments.get(c), str)
-                else assignments[c].cast(schema[c].dataType).alias(c)
-                if c in assignments
-                else F.col(c)
-            )
-            for c in cols
-        ]
-    )
-    _validate_constraints(updated, m.get("constraints"))
-    tag = f"u{parent + 1:06d}"
-    new_dv = _write_commit_files(dv_rows.repartition(1), root, tag + "dv")
-    _write_dv_agg_sidecar(spark, root, new_dv, matched, schema)
     meta = {
         **_carry_meta(m),
         **({"eq": m["eq"]} if m.get("eq") else {}),
         "dv": m.get("dv", []) + new_dv,
+        "partitions": parts,
     }
-    spec = m.get("partition_spec")
-    if spec:
-        # the updated copies carry tuples too (derived from their NEW
-        # values), so the DV-aware partition rollup and the bucket join
-        # stay engaged through MOR updates instead of refusing on the
-        # first untupled fresh file
-        from telemetry_parquet_spark.sources.partition_spec import (
-            write_partitioned_files,
-        )
-
-        new_files, upd_parts = write_partitioned_files(
-            updated, root, tag, spec
-        )
-        meta["partitions"] = upd_parts
-    else:
-        new_files = _write_commit_files(updated, root, tag)
     return _commit(
         root, "update-mor", m["files"] + new_files, m["schema"], parent,
         meta,
@@ -1668,49 +1739,31 @@ def overwrite(
                 f"overwrite: partition-spec columns {missing} absent from "
                 "the new data; drop_partition_spec first"
             )
-        from telemetry_parquet_spark.sources.partition_spec import (
-            write_partitioned_files,
-        )
-
-        new, parts = write_partitioned_files(
-            df, root, f"c{parent + 1:06d}", spec
-        )
-        meta = {**meta, "partitions": parts}
-    else:
-        new = _write_commit_files(df, root, f"c{parent + 1:06d}")
+    new, parts = _write_files(df, root, f"c{parent + 1:06d}", spec)
     return _commit(
         root, "overwrite", new, df.schema.json(), parent,
-        {**meta, **(extra or {})},
+        {**meta, "partitions": parts, **(extra or {})},
     )
 
 
-def delete_where(
+def _cow_delete(
     spark: SparkSession,
     root: str,
+    m: dict,
     predicate,
+    tag: str,
+    op: str,
     scan_predicates: list | None = None,
-) -> int:
-    """Copy-on-write delete at file granularity: files with NO matching
-    row carry over by reference; files WITH matches are rewritten without
-    the matching rows (NULL predicate = no match, SQL DELETE semantics).
-    One distributed scan finds the affected files; only their rows are
-    read again for the rewrite.
-
-    ``scan_predicates`` (planner ``Range``/``Eq``/``In`` objects) bounds
-    even that detection scan: per-file min/max stats prune the candidate
-    set first, so on a z-ordered/partitioned layout the WHOLE delete —
-    detection and rewrite — costs ∝ the affected region, never the table.
-    CONTRACT: every delete-predicate match must satisfy the scan
-    predicates (they describe where matches can live); a file pruned by
-    them is treated as match-free. The commit records the pruning
-    (``scan_candidates``/``scanned``) for audit."""
-    parent = latest_version(root)
-    m = read_manifest(root, parent)
-    _require_no_dv(m, "delete_where")
+) -> tuple[list[str], int]:
+    """Copy-on-write delete over manifest ``m``'s files (a version or a
+    branch head): one distributed scan finds the files holding a match
+    (NULL predicate = no match); the rest carry over by reference, and
+    only the affected files are read again and rewritten under ``tag``
+    without the matching rows. ``scan_predicates`` first prune the
+    detection scan by per-file min/max stats (``delete_where``'s
+    contract). Returns (the new file list, candidate files scanned)."""
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     hit = F.coalesce(pred, F.lit(False))
-    if not m["files"]:
-        return _commit(root, "delete", [], m["schema"], parent, _carry_meta(m))
     schema = StructType.fromJson(json.loads(m["schema"]))
     root_abs = os.path.abspath(root)
 
@@ -1739,11 +1792,7 @@ def delete_where(
             or all(_minmax_keep(stats[f], p) for p in scan_predicates)
         ]
     if not candidates:
-        return _commit(
-            root, "delete", m["files"], m["schema"], parent,
-            {**_carry_meta(m), "scan_candidates": 0,
-             "scanned": len(m["files"])},
-        )
+        return list(m["files"]), 0
     scan = spark.read.schema(schema).parquet(
         *[os.path.join(root, f) for f in candidates]
     )
@@ -1758,24 +1807,57 @@ def delete_where(
     rewrite = [f for f in m["files"] if f in affected]
     if affected and not rewrite:
         raise RuntimeError(
-            f"delete_where: scan found matches in {sorted(affected)[:3]} "
+            f"{op}: scan found matches in {sorted(affected)[:3]} "
             "but none resolved to a manifest file — path normalization bug, "
             "refusing to commit a no-op delete"
         )
-    audit = {
-        **_carry_meta(m),
-        "scan_candidates": len(candidates),
-        "scanned": len(m["files"]),
-    }
     if not rewrite:
-        return _commit(root, "delete", carried, m["schema"], parent, audit)
+        return carried, len(candidates)
     kept_rows = (
         spark.read.schema(schema)
         .parquet(*[os.path.join(root, f) for f in rewrite])
         .where(~hit)
     )
-    new = _write_commit_files(kept_rows, root, f"c{parent + 1:06d}")
-    return _commit(root, "delete", carried + new, m["schema"], parent, audit)
+    return (
+        carried + _write_commit_files(kept_rows, root, tag),
+        len(candidates),
+    )
+
+
+def delete_where(
+    spark: SparkSession,
+    root: str,
+    predicate,
+    scan_predicates: list | None = None,
+) -> int:
+    """Copy-on-write delete at file granularity: files with NO matching
+    row carry over by reference; files WITH matches are rewritten without
+    the matching rows (NULL predicate = no match, SQL DELETE semantics).
+    One distributed scan finds the affected files; only their rows are
+    read again for the rewrite.
+
+    ``scan_predicates`` (planner ``Range``/``Eq``/``In`` objects) bounds
+    even that detection scan: per-file min/max stats prune the candidate
+    set first, so on a z-ordered/partitioned layout the WHOLE delete —
+    detection and rewrite — costs ∝ the affected region, never the table.
+    CONTRACT: every delete-predicate match must satisfy the scan
+    predicates (they describe where matches can live); a file pruned by
+    them is treated as match-free. The commit records the pruning
+    (``scan_candidates``/``scanned``) for audit."""
+    parent = latest_version(root)
+    m = read_manifest(root, parent)
+    _require_no_dv(m, "delete_where")
+    if not m["files"]:
+        return _commit(root, "delete", [], m["schema"], parent, _carry_meta(m))
+    files, n_candidates = _cow_delete(
+        spark, root, m, predicate, f"c{parent + 1:06d}", "delete_where",
+        scan_predicates,
+    )
+    return _commit(
+        root, "delete", files, m["schema"], parent,
+        {**_carry_meta(m), "scan_candidates": n_candidates,
+         "scanned": len(m["files"])},
+    )
 
 
 def _key_range_candidates(
@@ -2378,11 +2460,7 @@ def compact_table(
         # ``zorder_cols`` rows are z-sorted WITHIN each tuple's file
         # (per-partition OPTIMIZE ZORDER: tuple pruning picks files,
         # tightened row-group stats prune inside them).
-        from telemetry_parquet_spark.sources.partition_spec import (
-            write_partitioned_files,
-        )
-
-        new, parts = write_partitioned_files(
+        new, parts = _write_files(
             rows, root, f"c{parent + 1:06d}", spec,
             zorder_cols=zorder_cols, bits=bits,
         )
@@ -2454,11 +2532,7 @@ def compact_where(
         # rewrite-data-files rule, scoped to the region; zorder_cols
         # z-sort WITHIN each tuple's file); carried files keep their
         # entries through _commit
-        from telemetry_parquet_spark.sources.partition_spec import (
-            write_partitioned_files,
-        )
-
-        new, parts = write_partitioned_files(
+        new, parts = _write_files(
             rows, root, f"c{parent + 1:06d}", spec,
             zorder_cols=zorder_cols, bits=bits,
         )
@@ -2842,13 +2916,7 @@ def table_changes(
         files = sorted(
             set(only) | (dv_touched & set(all_files))
         )
-        if not files:
-            return spark.createDataFrame([], schema)
-        if dv or eq:
-            return _read_logical(spark, root, files, schema, dv, eq)
-        return spark.read.schema(schema).parquet(
-            *[os.path.join(root, f) for f in files]
-        )
+        return _read_logical(spark, root, files, schema, dv, eq)
 
     old = _side(mf["files"], f_only, dv_f, eq_f)
     new = _side(mt["files"], t_only, dv_t, eq_t)
@@ -2933,18 +3001,14 @@ def create_tag(root: str, name: str, version: int | None = None) -> int:
     are PINNED against ``vacuum``: their manifests and files stay live
     regardless of the retention window — the audit/reproducibility use
     tags exist for (training-data snapshots, release pins)."""
-    v = latest_version(root) if version is None else version
-    read_manifest(root, v)  # must exist
-    os.makedirs(os.path.join(root, _TAG_DIR), exist_ok=True)
-    fd = os.open(
-        _tag_path(root, name),
-        os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-    )
     import time as _time
 
-    with os.fdopen(fd, "w") as f:
-        json.dump({"name": name, "version": v,
-                   "created_at": _time.time()}, f)
+    v = latest_version(root) if version is None else version
+    read_manifest(root, v)  # must exist
+    _write_json_excl(
+        _tag_path(root, name),
+        {"name": name, "version": v, "created_at": _time.time()},
+    )
     return v
 
 
@@ -3006,6 +3070,26 @@ def list_staged(root: str) -> list[str]:
     )
 
 
+def _stage(
+    root: str, wap_id: str, action: str, parent: int, m: dict, **fields
+) -> str:
+    """Land a write as a staged ``wap-<id>`` manifest against version
+    ``parent`` (manifest ``m``): no numbered version exists, so no reader
+    sees it until ``publish_staged``. Everything listed under
+    ``new_files`` stays vacuum-pinned until published or discarded."""
+    import time as _time
+
+    _write_json_excl(_staged_path(root, wap_id), {
+        "wap_id": wap_id,
+        "action": action,
+        "parent": parent,
+        **fields,
+        "schema": m["schema"],
+        "staged_at": _time.time(),
+    })
+    return wap_id
+
+
 def stage_append(
     spark: SparkSession, root: str, df: DataFrame, wap_id: str
 ) -> str:
@@ -3021,52 +3105,15 @@ def stage_append(
     run at publish."""
     parent = latest_version(root)
     m = read_manifest(root, parent)
-    _validate_constraints(df, m.get("constraints"))
-    _check_column_types(
-        df, StructType.fromJson(json.loads(m["schema"])), "stage_append"
+    # UNIQUE keys are probed at publish, against the publish-time head
+    new, parts, _, _ = _append_files(
+        spark, root, m, df, f"{_WAP_PREFIX}{wap_id}", "stage_append",
+        unique=False,
     )
-    table_cols = {
-        f.name for f in StructType.fromJson(json.loads(m["schema"])).fields
-    }
-    if set(df.columns) != table_cols:
-        raise ValueError(
-            f"stage_append: schema mismatch (df={sorted(df.columns)}, "
-            f"table={sorted(table_cols)})"
-        )
-    spec = m.get("partition_spec")
-    if spec:
-        # staged files are laid out by the table's spec so their tuples
-        # survive publication (catalog transactions stage through here)
-        from telemetry_parquet_spark.sources.partition_spec import (
-            write_partitioned_files,
-        )
-
-        new, parts = write_partitioned_files(
-            df, root, f"{_WAP_PREFIX}{wap_id}", spec
-        )
-    else:
-        new, parts = _write_commit_files(
-            df, root, f"{_WAP_PREFIX}{wap_id}"
-        ), {}
-    import time as _time
-
-    fd = os.open(
-        _staged_path(root, wap_id), os.O_CREAT | os.O_EXCL | os.O_WRONLY
+    return _stage(
+        root, wap_id, "wap-append", parent, m,
+        new_files=sorted(new), **({"partitions": parts} if parts else {}),
     )
-    with os.fdopen(fd, "w") as f:
-        json.dump(
-            {
-                "wap_id": wap_id,
-                "action": "wap-append",
-                "parent": parent,
-                "new_files": sorted(new),
-                **({"partitions": parts} if parts else {}),
-                "schema": m["schema"],
-                "staged_at": _time.time(),
-            },
-            f,
-        )
-    return wap_id
 
 
 def stage_delete_mor(
@@ -3089,49 +3136,20 @@ def stage_delete_mor(
             "stage_delete_mor: outstanding equality deletes — "
             "compact_table to materialize them before staging"
         )
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    hit = F.coalesce(pred, F.lit(False))
-    schema = StructType.fromJson(json.loads(m["schema"]))
-    if m["files"]:
-        matched = _scan_with_pos(
-            spark, root, m["files"], schema, m.get("dv", [])
-        ).where(hit)
-        matches = matched.select(
-            F.col("__file").alias("file"), F.col("__pos").alias("pos")
-        )
-    else:
-        # empty table: the staged vector masks nothing, but it still
-        # rides the manifest forward — give it a ZERO sidecar so the
-        # metadata-SUM fold keeps answering after later appends
-        matched = spark.createDataFrame([], schema)
-        matches = spark.createDataFrame([], "file string, pos long")
-    new_dv = _write_commit_files(
-        matches.repartition(1), root, f"{_WAP_PREFIX}{wap_id}"
-    )
     # the vector is frozen at stage time (publication refuses
-    # conflicting rewrites, appends commute), so its agg sidecar
-    # stays exact through publish — metadata SUM keeps answering
-    _write_dv_agg_sidecar(spark, root, new_dv, matched, schema)
-    import time as _time
-
-    fd = os.open(
-        _staged_path(root, wap_id), os.O_CREAT | os.O_EXCL | os.O_WRONLY
+    # conflicting rewrites, appends commute), so its agg sidecar stays
+    # exact through publish. On an empty table it masks nothing but
+    # still rides forward, with a ZERO sidecar.
+    new_dv, _, _ = _mor_write(
+        spark, root, m, predicate, f"{_WAP_PREFIX}{wap_id}",
+        "stage_delete_mor",
     )
-    with os.fdopen(fd, "w") as f:
-        json.dump(
-            {
-                "wap_id": wap_id,
-                "action": "wap-delete-mor",
-                "parent": parent,
-                "new_files": sorted(new_dv),  # key shared with appends so
-                "base_files": m["files"],     # vacuum pins them uniformly
-                "base_dv": m.get("dv", []),
-                "schema": m["schema"],
-                "staged_at": _time.time(),
-            },
-            f,
-        )
-    return wap_id
+    return _stage(
+        root, wap_id, "wap-delete-mor", parent, m,
+        new_files=sorted(new_dv),  # key shared with appends so
+        base_files=m["files"],     # vacuum pins them uniformly
+        base_dv=m.get("dv", []),
+    )
 
 
 def stage_update_mor(
@@ -3158,85 +3176,21 @@ def stage_update_mor(
         )
     if not m["files"]:
         raise ValueError("stage_update_mor: table has no data")
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    hit = F.coalesce(pred, F.lit(False))
-    schema = StructType.fromJson(json.loads(m["schema"]))
-    cols = [f.name for f in schema.fields]
-    bad = set(assignments) - set(cols)
-    if bad:
-        raise ValueError(f"stage_update_mor: unknown columns {sorted(bad)}")
-    for uname, ucols in (m.get("unique_keys") or {}).items():
-        touched = set(assignments) & set(ucols)
-        if touched:
-            raise ValueError(
-                f"stage_update_mor: SET touches UNIQUE key '{uname}' "
-                f"columns {sorted(touched)}; use merge_into for key "
-                "changes"
-            )
-    matched = _scan_with_pos(
-        spark, root, m["files"], schema, m.get("dv", [])
-    ).where(hit)
-    dv_rows = matched.select(
-        F.col("__file").alias("file"), F.col("__pos").alias("pos")
+    new_dv, new_files, parts = _mor_write(
+        spark, root, m, predicate, f"{_WAP_PREFIX}{wap_id}",
+        "stage_update_mor", assignments,
     )
-    updated = matched.select(
-        *[
-            (
-                F.expr(assignments[c]).cast(schema[c].dataType).alias(c)
-                if isinstance(assignments.get(c), str)
-                else assignments[c].cast(schema[c].dataType).alias(c)
-                if c in assignments
-                else F.col(c)
-            )
-            for c in cols
-        ]
+    return _stage(
+        root, wap_id, "wap-update-mor", parent, m,
+        # vacuum pins everything under "new_files"; the vector subset is
+        # recorded separately for publish
+        new_files=sorted(new_files) + sorted(new_dv),
+        data_files=sorted(new_files),
+        dv_files=sorted(new_dv),
+        **({"partitions": parts} if parts else {}),
+        base_files=m["files"],
+        base_dv=m.get("dv", []),
     )
-    _validate_constraints(updated, m.get("constraints"))
-    new_dv = _write_commit_files(
-        dv_rows.repartition(1), root, f"{_WAP_PREFIX}{wap_id}dv"
-    )
-    # frozen at stage time like the staged delete's vector (see
-    # stage_delete_mor) — exact through publish
-    _write_dv_agg_sidecar(spark, root, new_dv, matched, schema)
-    spec = m.get("partition_spec")
-    if spec:  # spec-aware updated copies, same as update_where_mor
-        from telemetry_parquet_spark.sources.partition_spec import (
-            write_partitioned_files,
-        )
-
-        new_files, upd_parts = write_partitioned_files(
-            updated, root, f"{_WAP_PREFIX}{wap_id}", spec
-        )
-    else:
-        new_files = _write_commit_files(
-            updated, root, f"{_WAP_PREFIX}{wap_id}"
-        )
-        upd_parts = {}
-    import time as _time
-
-    fd = os.open(
-        _staged_path(root, wap_id), os.O_CREAT | os.O_EXCL | os.O_WRONLY
-    )
-    with os.fdopen(fd, "w") as f:
-        json.dump(
-            {
-                "wap_id": wap_id,
-                "action": "wap-update-mor",
-                "parent": parent,
-                # vacuum pins everything under "new_files"; the vector
-                # subset is recorded separately for publish
-                "new_files": sorted(new_files) + sorted(new_dv),
-                "data_files": sorted(new_files),
-                "dv_files": sorted(new_dv),
-                **({"partitions": upd_parts} if upd_parts else {}),
-                "base_files": m["files"],
-                "base_dv": m.get("dv", []),
-                "schema": m["schema"],
-                "staged_at": _time.time(),
-            },
-            f,
-        )
-    return wap_id
 
 
 def read_staged(
@@ -3251,27 +3205,56 @@ def read_staged(
     s = read_staged_manifest(root, wap_id)
     m = read_manifest(root, s["parent"])
     schema = StructType.fromJson(json.loads(s["schema"]))
+    files, dv = m["files"], list(m.get("dv") or [])
     if s.get("action") == "wap-delete-mor":
-        if not m["files"]:
-            return spark.createDataFrame([], schema)
-        return _scan_with_pos(
-            spark, root, m["files"], schema,
-            (m.get("dv") or []) + s["new_files"],
-        ).select(*[f.name for f in schema.fields])
-    if s.get("action") == "wap-update-mor":
-        return _scan_with_pos(
-            spark, root, m["files"] + s["data_files"], schema,
-            (m.get("dv") or []) + s["dv_files"],
-        ).select(*[f.name for f in schema.fields])
-    files = m["files"] + s["new_files"]
-    if m.get("dv") or m.get("eq"):
-        # staged files are outside every eq scope (they postdate it);
-        # _read_logical applies each key set to its scoped files only
-        return _read_logical(
-            spark, root, files, schema, m.get("dv"), m.get("eq")
-        )
-    return spark.read.schema(schema).parquet(
-        *[os.path.join(root, f) for f in files]
+        dv += s["new_files"]
+    elif s.get("action") == "wap-update-mor":
+        files, dv = files + s["data_files"], dv + s["dv_files"]
+    else:
+        # staged files postdate every eq scope: _read_logical applies
+        # each key set to its scoped files only
+        files = files + s["new_files"]
+    return _read_logical(spark, root, files, schema, dv, m.get("eq"))
+
+
+def _land_append(
+    spark: SparkSession,
+    root: str,
+    action: str,
+    head: int,
+    mh: dict,
+    base: int,
+    added: list[str],
+    schema_json: str,
+    new_rows: DataFrame | None,
+    extra: dict,
+    stale_schema: str,
+) -> int:
+    """Commit files appended against version ``base`` onto the current
+    ``head`` (manifest ``mh``): the append-rebase rule WAP publish and
+    branch merges share. When the head moved past ``base`` the append is
+    REBASED — new files commute with any interleaved commit (Iceberg's
+    cherry-pick rule) — provided the schema is unchanged (else
+    ``stale_schema`` is raised) and ``new_rows`` pass the CURRENT head's
+    CHECK constraints, which may have changed meanwhile. ``new_rows``
+    are probed against the head's UNIQUE keys and the audit rides into
+    the commit. Outstanding vectors and equality deletes stay in force
+    (the added files postdate every eq scope)."""
+    extra = {**_carry_meta(mh), **extra}
+    if head != base:
+        if mh["schema"] != schema_json:
+            raise ValueError(stale_schema)
+        if new_rows is not None:
+            _validate_constraints(new_rows, mh.get("constraints"))
+        extra["rebased_from"] = base
+    if new_rows is not None:
+        extra.update(_validate_unique(spark, root, mh, new_rows))
+    if mh.get("dv"):
+        extra["dv"] = mh["dv"]
+    if mh.get("eq"):
+        extra["eq"] = mh["eq"]
+    return _commit(
+        root, action, mh["files"] + added, mh["schema"], head, extra
     )
 
 
@@ -3314,33 +3297,21 @@ def publish_staged(
             spark, root, wap_id, s, audits, caller_extra=extra
         )
     schema = StructType.fromJson(json.loads(s["schema"]))
-    new_rows = spark.read.schema(schema).parquet(
-        *[os.path.join(root, f) for f in s["new_files"]]
-    )
+    new_rows = _read_logical(spark, root, s["new_files"], schema, None, None)
     for audit in audits or []:
         audit(new_rows)
     head = latest_version(root)
-    mh = read_manifest(root, head)
-    extra = {**_carry_meta(mh), "wap_id": wap_id, **(extra or {})}
-    if head != s["parent"]:
-        if mh["schema"] != s["schema"]:
-            raise ValueError(
-                f"publish_staged: head schema changed since {wap_id!r} "
-                "was staged; re-stage against the current head"
-            )
-        _validate_constraints(new_rows, mh.get("constraints"))
-        extra["rebased_from"] = s["parent"]
-    # key uniqueness holds against the PUBLISH-time head, rebased or not
-    extra.update(_validate_unique(spark, root, mh, new_rows))
-    if mh.get("dv"):
-        extra["dv"] = mh["dv"]
-    if mh.get("eq"):  # staged files postdate every eq scope
-        extra["eq"] = mh["eq"]
-    if s.get("partitions"):  # spec-staged tuples survive publication
-        extra["partitions"] = s["partitions"]
-    v = _commit(
-        root, "wap-publish", mh["files"] + s["new_files"],
-        mh["schema"], head, extra,
+    v = _land_append(
+        spark, root, "wap-publish", head, read_manifest(root, head),
+        s["parent"], s["new_files"], s["schema"], new_rows,
+        {
+            "wap_id": wap_id,
+            **(extra or {}),
+            # spec-staged tuples survive publication
+            **({"partitions": s["partitions"]} if s.get("partitions") else {}),
+        },
+        f"publish_staged: head schema changed since {wap_id!r} was staged; "
+        "re-stage against the current head",
     )
     os.remove(_staged_path(root, wap_id))
     return v
@@ -3369,6 +3340,8 @@ def _publish_staged_mor(
     is_update = s["action"] == "wap-update-mor"
     dv_files = s["dv_files"] if is_update else s["new_files"]
     data_files = s["data_files"] if is_update else []
+    schema = StructType.fromJson(json.loads(s["schema"]))
+    copies = _read_logical(spark, root, data_files, schema, None, None)
     head = latest_version(root)
     mh = read_manifest(root, head)
     if head != s["parent"]:
@@ -3393,24 +3366,17 @@ def _publish_staged_mor(
                 "corrupt the CDC feed — re-stage"
             )
         if is_update:  # constraints may have tightened since staging
-            _validate_constraints(
-                spark.read.schema(
-                    StructType.fromJson(json.loads(s["schema"]))
-                ).parquet(*[os.path.join(root, f) for f in data_files]),
-                mh.get("constraints"),
-            )
+            _validate_constraints(copies, mh.get("constraints"))
     if audits:
-        schema = StructType.fromJson(json.loads(s["schema"]))
         if is_update:
-            subject = spark.read.schema(schema).parquet(
-                *[os.path.join(root, f) for f in data_files]
-            )
+            subject = copies
         else:
             doomed_pos = spark.read.parquet(
                 *[os.path.join(root, f) for f in dv_files]
             )
-            scan = _scan_with_pos(
-                spark, root, s["base_files"], schema, s["base_dv"]
+            scan = _read_logical(
+                spark, root, s["base_files"], schema, s["base_dv"], None,
+                keep_pos=True,
             )
             subject = scan.join(
                 doomed_pos,
@@ -3698,17 +3664,7 @@ def plan_snapshot_scan(
     for p in predicates:
         e = _predicate_expr(p)
         residual = e if residual is None else residual & e
-    if not kept:
-        empty = spark.createDataFrame([], schema)
-        return (
-            empty if residual is None else empty.where(residual)
-        ), plan
-    if m.get("dv") or m.get("eq"):
-        df = _read_logical(
-            spark, root, kept, schema, m.get("dv"), m.get("eq")
-        )
-    else:
-        df = spark.read.schema(schema).parquet(*plan.files)
+    df = _read_logical(spark, root, kept, schema, m.get("dv"), m.get("eq"))
     return (df if residual is None else df.where(residual)), plan
 
 

@@ -137,9 +137,13 @@ def test_sweep_dead_session_dirs(tmp_path):
     live.mkdir()
     legacy = base / "blockmgr-legacy"
     legacy.mkdir()
+    # all digits but too large for a pid: os.kill raises OverflowError
+    huge = base / ("9" * 30)
+    huge.mkdir()
     S._sweep_dead_session_dirs(str(base))
     assert not dead.exists()
     assert mine.exists() and live.exists() and legacy.exists()
+    assert huge.exists()
     # a vanished base is a no-op, never a crash
     S._sweep_dead_session_dirs(str(tmp_path / "missing"))
 
@@ -241,6 +245,8 @@ def test_bench_futex_probe_is_time_bounded():
     # a small n still terminates before the budget (counts, not hangs)
     us2 = bench.futex_wakeup_us(n=10, budget_s=5.0)
     assert us2 > 0.0
+    # no round-trip requested: 0.0, not a ZeroDivisionError
+    assert bench.futex_wakeup_us(n=0) == 0.0
 
 
 def test_bench_calibration_gate_malformed_env(monkeypatch):

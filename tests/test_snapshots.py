@@ -2072,3 +2072,68 @@ def test_filtered_agg_stays_metadata_only_through_mor_deletes(
     assert snapshot_filtered_agg(
         root, "o_orderpriority", "2-HIGH", minmax_cols=["o_orderkey"]
     ) is None
+
+
+def test_landing_targets_agree(spark, tmp_path):
+    """One DML core, three landing targets: the same append, MOR delete
+    and MOR update committed directly or staged + published, and the
+    same append and COW delete committed directly or on a branch merged
+    by fast-forward, land identical rows and identical per-file
+    ``rows``/``stats`` manifest entries."""
+    from telemetry_parquet_spark.sources.branches import (
+        branch_append,
+        branch_delete_where,
+        create_branch,
+        merge_branch,
+    )
+    from telemetry_parquet_spark.sources.snapshots import (
+        delete_where_mor,
+        publish_staged,
+        stage_append,
+        stage_delete_mor,
+        stage_update_mor,
+        update_where_mor,
+    )
+
+    def rows(lo, hi):
+        return spark.range(lo, hi, 1, 2).select(
+            F.col("id").alias("k"),
+            (F.col("id") % 3).alias("g"),
+            (F.col("id") * 10).alias("v"),
+        )
+
+    def landed(root):
+        m = read_manifest(root, latest_version(root))
+        entries = sorted(
+            (m["rows"][f], sorted(m["stats"][f].items())) for f in m["files"]
+        )
+        return _multiset(read_snapshot(spark, root)), entries
+
+    def fresh(name):
+        root = str(tmp_path / name)
+        append(spark, root, rows(0, 20))
+        return root
+
+    drop, bump = "g = 1 AND k < 15", "g = 2"
+    direct = fresh("direct")
+    append(spark, direct, rows(20, 30))
+    delete_where_mor(spark, direct, drop)
+    update_where_mor(spark, direct, bump, {"v": "v + 1"})
+    staged = fresh("staged")
+    stage_append(spark, staged, rows(20, 30), "a")
+    publish_staged(spark, staged, "a")
+    stage_delete_mor(spark, staged, drop, "d")
+    publish_staged(spark, staged, "d")
+    stage_update_mor(spark, staged, bump, {"v": "v + 1"}, "u")
+    publish_staged(spark, staged, "u")
+    assert landed(staged) == landed(direct)
+
+    direct_cow = fresh("direct_cow")
+    append(spark, direct_cow, rows(20, 30))
+    delete_where(spark, direct_cow, drop)
+    branched = fresh("branched")
+    create_branch(branched, "b")
+    branch_append(spark, branched, "b", rows(20, 30))
+    branch_delete_where(spark, branched, "b", drop)
+    merge_branch(spark, branched, "b")
+    assert landed(branched) == landed(direct_cow)

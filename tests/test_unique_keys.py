@@ -124,8 +124,11 @@ def test_branch_and_wap_enforce_unique_keys(spark, table, tmp_path):
     S.append(spark, table, _df(spark, 8005, 8006).select(
         (F.col("k") * 0 + 9000).alias("k"), "g"))
     # rebase ok: 8000..8010 vs main's 0..1000 + 9000
-    merge_branch(spark, table, "dev")
+    v = merge_branch(spark, table, "dev")
     assert S.read_snapshot(spark, table).where("k >= 8000").count() == 11
+    # the rebased merge records its UNIQUE audit, as a rebased publish does
+    cand, total = S.read_manifest(table, v)["unique_scan"]["pk"]
+    assert 0 <= cand < total  # recorded, and the probe was pruned
 
     # a second branch whose rows collide with what main gained meanwhile:
     # fork FIRST, then main takes the same key the branch appended
