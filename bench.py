@@ -69,11 +69,13 @@ HEADLINE = [
     "q21_waiting_suppliers",
     "mm_decoded_features",
     "stat_moments_by_flag",
-    # round 2 additions: track both ANN families (VERDICT r1 §8)
+    # round 2 additions: track both ANN families (VERDICT r1 §8); the IVF
+    # slot held sim_ivf_probe_topk (deleted) before sim_ivf_det_topk, so
+    # BENCH history breaks at that row
     "dd_simhash_near_dup_pairs",
-    "sim_ivf_probe_topk",
+    "sim_ivf_det_topk",
     # round 3 additions: bloom incremental dedup, sequence packing, weighted
-    # mixing, image near-dup (sim_ivf_probe_topk now runs n_cells=256)
+    # mixing, image near-dup
     "dd_incremental_bloom",
     "pack_sequences",
     "mix_sampled_corpus",

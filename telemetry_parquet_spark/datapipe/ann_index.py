@@ -1,7 +1,7 @@
 """Persisted IVF vector index as a TABLE: cell-partitioned postings,
 incremental appends, partition-pruned probes.
 
-The ANN family (datapipe/similarity.py, ivf.py, pq.py) computes indexes
+The ANN family (datapipe/similarity.py, pq.py) computes indexes
 in-flight; a 100 TB corpus wants the index to be a first-class TABLE
 artifact instead — built once, appended to as vectors land, probed by
 reading only the probed cells' files:
@@ -47,7 +47,9 @@ from pyspark.sql import functions as F
 
 from telemetry_parquet_spark.ml.kmeans_det import (
     _matmul_assign_udf,
+    batch_matrix,
     kmeans_fit,
+    packed_distances,
 )
 
 _CENTROIDS = "centroids"
@@ -64,9 +66,7 @@ def build_ivf_table(
     """Train on ``qvec`` (vec_id, qv int64 arrays) and persist the index:
     ``root/centroids`` (cluster_id, cvec) and ``root/postings``
     partitioned by cluster_id."""
-    assigned, centroids = kmeans_fit(
-        qvec, k=k, iters=iters, assignment="matmul"
-    )
+    assigned, centroids = kmeans_fit(qvec, k=k, iters=iters)
     (
         assigned.join(qvec, "vec_id")
         .select("vec_id", "qv", "cluster_id")
@@ -222,26 +222,48 @@ def compact_index(spark: SparkSession, root: str) -> tuple[int, int]:
     return before, _count(posts_dir)
 
 
-def _probe_cells_udf(centroids: list[tuple[int, list[int]]], k: int, nprobe: int):
-    """array<long> of the ``nprobe`` nearest cells per query vector, in
-    packed ``d2*k + cid`` order — the same exact-integer ordering the
+def _nearest_cells(centroids: list[tuple[int, list[int]]], k: int, nprobe: int):
+    """Return ``cells(m)``: per row of an int64 vector matrix, the
+    ``nprobe`` nearest cells — the first ``nprobe`` of its sorted
+    ``packed_distances`` row, the same exact-integer ordering the
     assignment uses, so the probe ranking is tie-free and replayable."""
-    cids = np.array([c for c, _ in centroids], dtype=np.int64)
-    cm = np.array([v for _, v in centroids], dtype=np.int64)
-    cc = (cm * cm).sum(axis=1)
+    packed = packed_distances(centroids, k)
+    n = min(nprobe, len(centroids))
+
+    def cells(m: np.ndarray) -> np.ndarray:
+        return np.sort(packed(m), axis=1)[:, :n] % np.int64(k)
+
+    return cells
+
+
+def _probe_cells_udf(centroids: list[tuple[int, list[int]]], k: int, nprobe: int):
+    """array<long> of the ``nprobe`` nearest cells per query vector."""
+    cells = _nearest_cells(centroids, k, nprobe)
 
     @F.pandas_udf("array<long>")
     def probe(qv: pd.Series) -> pd.Series:
         if len(qv) == 0:
             return pd.Series([], dtype="object")
-        m = np.stack([np.asarray(v, dtype=np.int64) for v in qv])
-        d2 = (m * m).sum(axis=1)[:, None] - 2 * (m @ cm.T) + cc[None, :]
-        packed = d2 * np.int64(k) + cids[None, :]
-        n = min(nprobe, packed.shape[1])
-        top = np.sort(packed, axis=1)[:, :n] % np.int64(k)
-        return pd.Series(list(top))
+        return pd.Series(list(cells(batch_matrix(qv))))
 
     return probe
+
+
+def _require_cell_pruned(df: DataFrame, cells: list[int], what: str) -> None:
+    """RAISES unless every file the (post-prune) scan touches lives
+    under a probed cell directory — the proof partition pruning engaged."""
+    touched = {
+        r.f
+        for r in df.select(
+            F.col("_metadata.file_path").alias("f")
+        ).distinct().collect()
+    }
+    allowed = tuple(f"cluster_id={c}/" for c in cells)
+    stray = [f for f in touched if not any(a in f for a in allowed)]
+    if stray:
+        raise RuntimeError(
+            f"{what} scan escaped the probed cells: {stray[:3]}"
+        )
 
 
 def ivf_table_topk(
@@ -276,18 +298,7 @@ def ivf_table_topk(
         F.col("cluster_id").isin(cells)
     )
     if require_pruned:
-        touched = {
-            r.f
-            for r in posts.select(
-                F.col("_metadata.file_path").alias("f")
-            ).distinct().collect()  # one row per POST-PRUNE file
-        }
-        allowed = tuple(f"cluster_id={c}/" for c in cells)
-        stray = [f for f in touched if not any(a in f for a in allowed)]
-        if stray:
-            raise RuntimeError(
-                f"probe scan escaped the probed cells: {stray[:3]}"
-            )
+        _require_cell_pruned(posts, cells, "probe")
     probe_df = F.broadcast(
         spark.createDataFrame(probe_pairs, "qid long, cluster_id long")
     )
@@ -347,31 +358,23 @@ def _sub_codebook(train_seed_rows: list, m_sub: int) -> np.ndarray:
 
 
 def _pq_encode_udf(cb: np.ndarray):
-    """array<long> of M codes per vector: per subspace the packed
-    ``min(d2*k_code + c)`` argmin — the same tie-free exact-integer
-    ordering the cell assignment uses, one int64 matmul per subspace
-    per Arrow batch."""
+    """array<long> of M codes per vector: per subspace the row min of
+    ``packed_distances`` over that subspace's codebook (cid = code) —
+    the same tie-free exact-integer ordering the cell assignment uses,
+    one int64 matmul per subspace per Arrow batch."""
     m_sub, k_code, subdim = cb.shape
-    ccs = [(cb[j] * cb[j]).sum(axis=1) for j in range(m_sub)]
+    packs = [packed_distances(list(enumerate(cb[j])), k_code)
+             for j in range(m_sub)]
 
     @F.pandas_udf("array<long>")
     def encode(qv: pd.Series) -> pd.Series:
         if len(qv) == 0:
             return pd.Series([], dtype="object")
-        mat = np.stack([np.asarray(v, dtype=np.int64) for v in qv])
-        n = mat.shape[0]
-        out = np.empty((n, m_sub), dtype=np.int64)
-        for j in range(m_sub):
+        mat = batch_matrix(qv)
+        out = np.empty((mat.shape[0], m_sub), dtype=np.int64)
+        for j, packed in enumerate(packs):
             s = mat[:, j * subdim:(j + 1) * subdim]
-            d2 = (
-                (s * s).sum(axis=1)[:, None]
-                - 2 * (s @ cb[j].T)
-                + ccs[j][None, :]
-            )
-            packed = d2 * np.int64(k_code) + np.arange(
-                k_code, dtype=np.int64
-            )[None, :]
-            out[:, j] = packed.min(axis=1) % np.int64(k_code)
+            out[:, j] = packed(s).min(axis=1) % np.int64(k_code)
         return pd.Series(list(out))
 
     return encode
@@ -404,9 +407,7 @@ def build_ivfpq_table(
     (vec_id, qv), the last two written ``partitionBy(cluster_id)``.
     Codes and raw vectors are SEPARATE relations so the ADC probe scan
     never pays raw-vector bytes."""
-    assigned, centroids = kmeans_fit(
-        qvec, k=k, iters=iters, assignment="matmul"
-    )
+    assigned, centroids = kmeans_fit(qvec, k=k, iters=iters)
     seed_rows = sorted(
         (int(r.vec_id), [int(v) for v in r.qv])
         for r in qvec.orderBy("vec_id").limit(k_code).collect()
@@ -483,23 +484,6 @@ def append_vectors_pq(
         assigned.unpersist()
 
 
-def _require_cell_pruned(df: DataFrame, cells: list[int], what: str) -> None:
-    """RAISES unless every file the (post-prune) scan touches lives
-    under a probed cell directory — the proof partition pruning engaged."""
-    touched = {
-        r.f
-        for r in df.select(
-            F.col("_metadata.file_path").alias("f")
-        ).distinct().collect()
-    }
-    allowed = tuple(f"cluster_id={c}/" for c in cells)
-    stray = [f for f in touched if not any(a in f for a in allowed)]
-    if stray:
-        raise RuntimeError(
-            f"{what} scan escaped the probed cells: {stray[:3]}"
-        )
-
-
 def ivfpq_table_topk(
     spark: SparkSession,
     root: str,
@@ -529,17 +513,14 @@ def ivfpq_table_topk(
     # probe cells in plain numpy from the already-collected queries ×
     # driver-resident centroids — same packed min(d2*k + cid) ordering
     # as _probe_cells_udf, without launching a second Spark job per call
-    cids = np.array([c for c, _ in centroids], dtype=np.int64)
-    cm = np.array([v for _, v in centroids], dtype=np.int64)
-    cc = (cm * cm).sum(axis=1)
     probe_pairs = []
-    for r in qrows:
-        qv = np.asarray(r.qv, dtype=np.int64)
-        d2 = (qv * qv).sum() - 2 * (cm @ qv) + cc
-        packed = d2 * np.int64(k) + cids
-        n = min(nprobe, packed.shape[0])
-        for c in np.sort(packed)[:n] % np.int64(k):
-            probe_pairs.append((int(r.vec_id), int(c)))
+    if qrows:
+        top = _nearest_cells(centroids, k, nprobe)(
+            batch_matrix(r.qv for r in qrows)
+        )
+        probe_pairs = [
+            (int(r.vec_id), int(c)) for r, row in zip(qrows, top) for c in row
+        ]
     cells = sorted({c for _, c in probe_pairs})
     # per-query ADC distance tables: n_q × M × k_code rows, broadcast
     dtab_rows = []

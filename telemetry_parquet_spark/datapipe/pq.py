@@ -6,7 +6,7 @@ quantized to the id of its nearest sub-centroid, so a vector stores as M
 small codes (here M=8 × 4-bit) instead of D floats — 64× smaller for the
 sf embeddings — and query scoring becomes table lookups (ADC: asymmetric
 distance computation) instead of full float dot products. Composes with IVF
-(datapipe/ivf.py): IVF prunes cells, PQ compresses what's scanned.
+(datapipe/ann_index.py): IVF prunes cells, PQ compresses what's scanned.
 
 Relational shapes, all exactly oracle-able:
 - **Codebooks** derive from the seed rows (``vec_id < k``) — deterministic

@@ -21,9 +21,7 @@ module implements that shape relationally:
    replayable in SQL (the oracle compares the full keep/drop labeling).
 
 Seeds are the vectors with the C smallest ids — deterministic and derivable
-by both engines from the table itself, which is what makes the oracle exact
-(the pyspark.ml KMeans path in datapipe/ivf.py remains the quality option;
-its full-probe configuration is exactness-gated separately).
+by both engines from the table itself, which is what makes the oracle exact.
 
 Cosine values are rounded to 6dp before every comparison (argmax and
 threshold), the repo's established cross-engine float discipline.

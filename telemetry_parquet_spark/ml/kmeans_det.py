@@ -1,10 +1,8 @@
 """Deterministic integer-exact Lloyd's k-means — the fourth exactly-oracled
 iterative algorithm (after PageRank, BPE, label propagation).
 
-``pyspark.ml`` KMeans (used by the IVF index build, datapipe/ivf.py:96) is
-the production clustering path but its float sum-order and RNG make it
-unreplayable cross-engine, so everything downstream of it is rows-only
-gated. THIS module restates Lloyd's iteration over exact integers so a
+``pyspark.ml`` KMeans' float sum-order and RNG make it unreplayable
+cross-engine. THIS module restates Lloyd's iteration over exact integers so a
 DuckDB recursive CTE replays every assignment and centroid bit for bit:
 
 - vectors are quantized once: ``q = floor(x * 10^6 + 0.5)`` per component
@@ -25,16 +23,16 @@ an empty cluster simply drops out of the centroid table — identically in
 both engines — which is standard Lloyd behavior, not a divergence.
 
 Scale: the corpus is touched once per iteration by a MAP-ONLY assignment
-(centroids ride along as literal arrays — k*dim values, collected per
+(centroids ride along in the UDF closure — k*dim values, collected per
 iteration exactly like BPE's argmax rows: a driver-sized contract, T
 round-trips total) followed by one map-side-combinable (cid, dim) sum
-whose shuffle is k*dim rows. No join, no corpus-sized shuffle. For
-hundreds-of-cells indexes the assignment switches (``assignment='auto'``,
-k*dim > MATMUL_THRESHOLD) to ``_matmul_assign_udf`` — the int64 numpy
-matmul analog of the IVF build's float scorer (datapipe/ivf.py:71) —
-which computes the SAME packed min(d2*k + cid) integers, so the two
-paths are bit-identical (equality-gated in tests/test_kmeans_det.py)
-and the per-iteration codegen recompile cost no longer grows with k.
+whose shuffle is k*dim rows. No join, no corpus-sized shuffle. The
+assignment is ``_matmul_assign_udf``: one int64 numpy matmul per Arrow
+batch, whose generated code does not grow with k.
+
+``packed_distances`` is the ONE implementation of the packed ranking
+rule: k-means assignment, IVF cell routing and probing
+(datapipe/ann_index.py) and PQ encoding all rank centroids through it.
 """
 
 from __future__ import annotations
@@ -48,13 +46,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000
-
-# Above this k*dim the per-centroid codegen expression is the wrong tool:
-# the generated argmin chain recompiles every iteration and grows with k
-# (measured ~90% of wall at k=8 already compile, BENCH r08 notes), while
-# the int64 numpy matmul amortizes to one Arrow batch pass. 4096 = 64
-# cells at dim 64, the same knee the float IVF build uses (ivf.py).
-MATMUL_THRESHOLD = 4096
 
 
 def quantize_vectors(
@@ -71,47 +62,53 @@ def quantize_vectors(
     )
 
 
-def _packed_argmin(centroids: list[tuple[int, list[int]]], k: int):
-    """min over centroids of (d2 * k + cid) — one codegen expression, no
-    join, no shuffle; d2 is an order-free exact integer fold per centroid."""
-    packed = []
-    for cid, vec in centroids:
-        lit_vec = F.array(*[F.lit(int(v)) for v in vec])
-        d2 = F.aggregate(
-            F.zip_with(F.col("qv"), lit_vec, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        packed.append(d2 * F.lit(k) + F.lit(cid))
-    return F.least(*packed) if len(packed) > 1 else packed[0]
+def packed_distances(centroids: list[tuple[int, list[int]]], k: int):
+    """Return ``packed(m)``: for an (n, dim) int64 matrix of quantized
+    vectors (one Arrow batch), the (n, k') int64 matrix of
+    ``d2 * k + cid`` against each of the k' centroids.
 
-
-def _matmul_assign_udf(centroids: list[tuple[int, list[int]]], k: int):
-    """The hundreds-of-cells assignment: one int64 numpy matmul per Arrow
-    batch, BIT-IDENTICAL to ``_packed_argmin`` (equality-gated in
-    tests/test_kmeans_det.py). All arithmetic stays in int64 — d2 via
-    |q|² − 2·q·c + |c|² (≤ 64·(2·10⁶)² ≈ 2.6·10¹⁴), the argmin via the
-    SAME packed min(d2·k + cid) integers the expression path folds — so
-    there is no float summation order to diverge on, and the lowest-cid
-    tie-break is the packed min itself, not np.argmin's first-hit."""
+    All arithmetic stays in int64 — d2 via |q|² − 2·q·c + |c|²
+    (≤ 64·(2·10⁶)² ≈ 2.6·10¹⁴) — so there is no float summation order to
+    diverge on. With every cid < k, a row's packed order is the exact
+    lexicographic (d2, cid) order: its min is the nearest centroid with
+    the lowest-cid tie-break, its sorted prefix the nearest cells, and
+    ``% k`` recovers the cid. The centroid norms are computed here, once
+    per caller, not once per batch."""
     cids = np.array([c for c, _ in centroids], dtype=np.int64)
     cm = np.array([v for _, v in centroids], dtype=np.int64)  # (k', dim)
     cc = (cm * cm).sum(axis=1)  # (k',) int64
+    kk = np.int64(k)
+
+    def packed(m: np.ndarray) -> np.ndarray:
+        d2 = (m * m).sum(axis=1)[:, None] - 2 * (m @ cm.T) + cc[None, :]
+        return d2 * kk + cids[None, :]
+
+    return packed
+
+
+def batch_matrix(qv: pd.Series) -> np.ndarray:
+    """(n, dim) int64 matrix of one Arrow batch of quantized vectors."""
+    return np.stack([np.asarray(v, dtype=np.int64) for v in qv])
+
+
+def _matmul_assign_udf(centroids: list[tuple[int, list[int]]], k: int):
+    """cluster_id of the nearest centroid per vector: the row min of
+    ``packed_distances`` — the same packed min(d2*k + cid) integers the
+    recursive-CTE oracle folds, so the lowest-cid tie-break is the packed
+    min itself, not np.argmin's first-hit."""
+    packed = packed_distances(centroids, k)
 
     @F.pandas_udf("long")
     def assign(qv: pd.Series) -> pd.Series:
         if len(qv) == 0:
             return pd.Series([], dtype="int64")
-        m = np.stack([np.asarray(v, dtype=np.int64) for v in qv])
-        d2 = (m * m).sum(axis=1)[:, None] - 2 * (m @ cm.T) + cc[None, :]
-        packed = d2 * np.int64(k) + cids[None, :]
-        return pd.Series(packed.min(axis=1) % np.int64(k))
+        return pd.Series(packed(batch_matrix(qv)).min(axis=1) % np.int64(k))
 
     return assign
 
 
 def kmeans_fit(
-    qvec: DataFrame, k: int = 8, iters: int = 4, assignment: str = "auto"
+    qvec: DataFrame, k: int = 8, iters: int = 4
 ) -> tuple[DataFrame, list[tuple[int, list[int]]]]:
     """Run ``iters`` Lloyd iterations; return (final assignment DataFrame
     with columns (vec_id, cluster_id), final centroid list).
@@ -119,15 +116,7 @@ def kmeans_fit(
     Iteration t assigns every point to the nearest current centroid, then
     recomputes centroids from that assignment; the returned assignment is
     the one that PRODUCED the returned centroids (same convention as the
-    recursive oracle).
-
-    ``assignment`` picks the per-point argmin implementation — "expr"
-    (literal-centroid codegen fold), "matmul" (int64 numpy pandas_udf),
-    or "auto" (matmul once k*dim > MATMUL_THRESHOLD). The two paths are
-    bit-identical by construction (same packed int64 min), so the choice
-    is purely a performance knob."""
-    if assignment not in ("auto", "expr", "matmul"):
-        raise ValueError(f"unknown assignment mode {assignment!r}")
+    recursive oracle)."""
     if iters < 1:
         raise ValueError(f"kmeans_fit requires iters >= 1, got {iters}")
     qvec = qvec.persist()
@@ -139,28 +128,19 @@ def kmeans_fit(
             raise ValueError(
                 f"kmeans_fit: need >= {k} input vectors, got {len(seeds)}"
             )
-        # Renumber seeds 0..k-1 in vec_id order: _packed_argmin packs the
-        # cluster id into d2*k + cid, which requires cid < k.
+        # Renumber seeds 0..k-1 in vec_id order: packed_distances packs
+        # the cluster id into d2*k + cid, which requires cid < k.
         centroids = [
             (i, vec)
             for i, (_, vec) in enumerate(
                 sorted((int(r.vec_id), [int(v) for v in r.qv]) for r in seeds)
             )
         ]
-        dim = len(centroids[0][1])
-        use_matmul = assignment == "matmul" or (
-            assignment == "auto" and k * dim > MATMUL_THRESHOLD
-        )
         assigned = None
         for _ in range(iters):
-            if use_matmul:
-                cid = _matmul_assign_udf(centroids, k)(F.col("qv")).alias(
-                    "cluster_id"
-                )
-            else:
-                cid = (_packed_argmin(centroids, k) % F.lit(k)).alias(
-                    "cluster_id"
-                )
+            cid = _matmul_assign_udf(centroids, k)(F.col("qv")).alias(
+                "cluster_id"
+            )
             assigned = qvec.select("vec_id", "qv", cid)
             sums = (
                 assigned.select(

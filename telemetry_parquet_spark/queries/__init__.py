@@ -43,13 +43,15 @@ from telemetry_parquet_spark.queries import table_service  # noqa: F401, E402
 # Round-13 window (CORRECTNESS_r12 was 50/50 hash-green). Per the r12
 # verdict: (1) the 3 never-checked round-13 queries (MERGE WHEN NOT
 # MATCHED BY SOURCE, SQL DELETE routed to equality deletes, persisted
-# IVF-PQ), (2) 47 of the 49 queries whose latest driver row is r08 —
-# the whole UDAF/window/explode/sketch cohort, several of which ride
-# the scan-planner/_read_logical code rewritten in r10-r12 (3+47 = 50).
+# IVF-PQ), (2) 45 of the 47 registered queries whose latest driver row
+# is r08 — the whole UDAF/window/explode/sketch cohort, several of which
+# ride the scan-planner/_read_logical code rewritten in r10-r12
+# (3+45 = 48; the 2 free slots fall to registration order, after the
+# float-IVF pair sim_ivf_exact_topk / sim_ivf_probe_topk was deleted).
 # The two slipped r08 rows (f_date_functions, f_string_functions —
 # pure scalar functions over plain parquet, no snapshot/scan-planner
 # dependence) plus the r09 cohort lead the r14 window. Freshness
-# arithmetic: 232 registered queries / 50 slots = a ~4.6-round
+# arithmetic: 230 registered queries / 50 slots = a ~4.6-round
 # steady-state rotation; each round re-certifies the stalest cohort
 # plus all never-checked names.
 _DRIVER_PRIORITY: tuple[str, ...] = (
@@ -57,7 +59,7 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "snapshot_merge_by_source",
     "snapshot_delete_eq_sql",
     "sim_ivfpq_persisted_topk",
-    # latest driver row r08 — the stalest cohort (47 of 49; the two
+    # latest driver row r08 — the stalest cohort (45 of 47; the two
     # pure scalar-function rows f_date_functions / f_string_functions
     # slip to r14 — they touch no snapshot/scan-planner code)
     "a1_earliest_event_per_user",
@@ -97,8 +99,6 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "rep_repetition_features",
     "sim_brute_force_topk",
     "sim_ivf_det_topk",
-    "sim_ivf_exact_topk",
-    "sim_ivf_probe_topk",
     "skip_bloom_point_lookup",
     "split_train_holdout",
     "stream_hll_registers",

@@ -217,7 +217,7 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored pairs — LINEAR in the corpus for a bounded batch, never
     corpus²); per-query ranking is a hash-partitioned window. For
     corpus-sized query sets the scale path is the LSH/IVF-bucketed join
-    (``lsh_bucket_top_k`` / ``datapipe/ivf.py``), which replaces the
+    (``lsh_bucket_top_k`` / ``datapipe/ann_index.py``), which replaces the
     broadcast with an equi-join on bucket signatures."""
     from telemetry_parquet_spark.datapipe.similarity import pairwise_top_k
 
@@ -701,57 +701,6 @@ def a7_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = hll_sketch(events, keys=["day", "event_type"], value_col="user_id")
     merged = hll_merge(daily, keys=["event_type"])
     return hll_estimate(merged).select("event_type", "distinct_estimate")
-
-
-@query(
-    "sim_ivf_exact_topk",
-    oracle="""
-    WITH q AS (
-      SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
-    ), pairs AS (
-      SELECT e.vec_id,
-             UNNEST(CAST(e.embedding AS DOUBLE[])) AS a,
-             UNNEST(q.qv) AS b
-      FROM embeddings e, q
-    ), scored AS (
-      SELECT vec_id,
-             round(SUM(a*b) / (sqrt(SUM(a*a)) * sqrt(SUM(b*b))), 6) AS cosine_sim
-      FROM pairs GROUP BY vec_id
-    )
-    SELECT vec_id, cosine_sim
-    FROM scored
-    ORDER BY cosine_sim DESC, vec_id ASC
-    LIMIT 10
-    """,
-)
-def sim_ivf_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with FULL probe (nprobe = n_cells): every cell is rescored,
-    so the result must equal brute-force cosine top-k exactly — this puts
-    the whole index pipeline (KMeans centroids → JVM-side argmin cell
-    assignment → probe → rescore) under the exact-parity gate. The
-    approximate configuration of the same operator is sim_ivf_probe_topk."""
-    from telemetry_parquet_spark.datapipe.ivf import build_ivf_index, ivf_top_k
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in emb.where(F.col("vec_id") == 0).first()["embedding"]]
-    index = build_ivf_index(emb, n_cells=32, id_col="vec_id", vec_col="embedding")
-    return ivf_top_k(index, qv, k=10, nprobe=32)
-
-
-@query("sim_ivf_probe_topk")
-def sim_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN, the 100 TB configuration: 256 cells, probe the 32 nearest —
-    exact-rescore ~1/8 of the corpus. 256 cells exercises the constant-size
-    cell-assignment fold (transform + array_min) at the index granularity a
-    real deployment uses — the round-1 chained-CASE form fell out of
-    codegen far below this. Approximate by design → rows-only check; recall
-    vs brute force is bounded in tests/test_ivf.py."""
-    from telemetry_parquet_spark.datapipe.ivf import build_ivf_index, ivf_top_k
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in emb.where(F.col("vec_id") == 0).first()["embedding"]]
-    index = build_ivf_index(emb, n_cells=256, id_col="vec_id", vec_col="embedding")
-    return ivf_top_k(index, qv, k=10, nprobe=32)
 
 
 @query(

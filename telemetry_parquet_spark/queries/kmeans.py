@@ -1,13 +1,15 @@
 """Deterministic k-means queries (ml/kmeans_det.py): final assignments and
 the derived centroid relation, both under EXACT recursive-CTE DuckDB
 oracles — the fourth exactly-oracled iterative algorithm (PageRank, BPE,
-label propagation precedent). ``pyspark.ml`` KMeans stays the production
-IVF path; this family proves the Lloyd iteration itself cross-engine:
+label propagation precedent) — and the IVF / IVF-PQ indexes trained by it.
+This family proves the Lloyd iteration itself cross-engine:
 integer-quantized vectors, exact int64 distances, packed (d2, cid) argmin,
 floor-rounded centroid updates.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,8 +42,8 @@ q AS (
 # lexicographic (d2, cid) minimum, lowest-cid tie-break.
 def _a_cte(k: int, iters: int) -> str:
     """The Lloyd recursion CTE at a given (k, iters) — shared verbatim by
-    the k=8 expression-path queries and the k=256 matmul-path query, so
-    both assignment implementations answer to the same oracle."""
+    the k=8 queries and the k=256 query, so both cell counts answer to
+    the same oracle."""
     return f"""
 a(iter, vec_id, cid) AS (
   SELECT 1 AS iter, vec_id, CAST(packed % {k} AS BIGINT) AS cid FROM (
@@ -79,11 +81,7 @@ def _fit(spark: SparkSession, sf_dir: str):
     from telemetry_parquet_spark.ml.kmeans_det import kmeans_fit, quantize_vectors
 
     qvec = quantize_vectors(load_table(spark, sf_dir, "embeddings"))
-    # matmul even at k=8: the literal-expression fold recompiles codegen
-    # every iteration (measured sf0.1: expr 4.2 s vs matmul 1.8 s warm);
-    # bit-identical by the backend-equality gate, so the oracle is
-    # unaffected.
-    assigned, _ = kmeans_fit(qvec, k=K, iters=ITERS, assignment="matmul")
+    assigned, _ = kmeans_fit(qvec, k=K, iters=ITERS)
     return assigned, qvec
 
 
@@ -131,27 +129,21 @@ ITERS_LARGE = 2
 
 @query(
     "ml_kmeans_k256_assignments",
-    # Same recursive oracle at IVF-realistic cell count k=256 — this is
-    # the query that gates the MATMUL assignment path (the codegen
-    # expression fold would be the wrong tool at 256 centroids; see
-    # ml/kmeans_det.py MATMUL_THRESHOLD). d2*k + cid at k=256 peaks at
-    # ~6.6e16 << 2^63, so the packed argmin stays exact int64.
+    # Same recursive oracle at IVF-realistic cell count k=256.
+    # d2*k + cid at k=256 peaks at ~6.6e16 << 2^63, so the packed argmin
+    # stays exact int64.
     oracle=f"""
     WITH RECURSIVE {_Q}, {_a_cte(K_LARGE, ITERS_LARGE)}
     SELECT vec_id, cid AS cluster_id FROM a WHERE iter = {ITERS_LARGE}
     """,
 )
 def ml_kmeans_k256_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Final Lloyd assignment at k=256 via the int64 numpy-matmul
-    pandas_udf (``assignment='matmul'``) — the hundreds-of-cells
-    production path, exact-gated against the SAME recursive CTE the
-    expression path answers to (bit-identical packed argmin)."""
+    """Final Lloyd assignment at k=256 — the hundreds-of-cells index
+    scale, exact-gated against the SAME recursive CTE as k=8."""
     from telemetry_parquet_spark.ml.kmeans_det import kmeans_fit, quantize_vectors
 
     qvec = quantize_vectors(load_table(spark, sf_dir, "embeddings"))
-    assigned, _ = kmeans_fit(
-        qvec, k=K_LARGE, iters=ITERS_LARGE, assignment="matmul"
-    )
+    assigned, _ = kmeans_fit(qvec, k=K_LARGE, iters=ITERS_LARGE)
     return assigned
 
 
@@ -171,9 +163,7 @@ ITERS_IDX = 2
     # probe = top-NPROBE cells by integer centroid distance (packed
     # d2*k+cid ordering), candidates = final-assignment members of those
     # cells, scoring = exact int64 dot products of the quantized vectors.
-    # The production float-cosine IVF (sim_ivf_probe_topk) stays rows-only
-    # by nature; THIS query pins the whole assign→probe→rescore shape
-    # cross-engine.
+    # THIS query pins the whole assign→probe→rescore shape cross-engine.
     oracle=f"""
     WITH RECURSIVE {_Q}, {_A},
     fin AS (SELECT vec_id, cid FROM a WHERE iter = {ITERS}),
@@ -225,47 +215,24 @@ def sim_ivf_det_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic IVF top-k: k-means cells, NPROBE nearest cells per
     query, exact int64 dot-product rescore over the candidates — every
     stage (training iterations included) hash-gated cross-engine."""
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
+    from telemetry_parquet_spark.datapipe.ann_index import _probe_cells_udf
     from telemetry_parquet_spark.ml.kmeans_det import (
         kmeans_fit,
         quantize_vectors,
     )
 
     qvec = quantize_vectors(load_table(spark, sf_dir, "embeddings")).persist()
-    # matmul backend: kills the per-iteration codegen recompile (see _fit)
-    assigned, centroids = kmeans_fit(
-        qvec, k=K, iters=ITERS, assignment="matmul"
-    )
+    assigned, centroids = kmeans_fit(qvec, k=K, iters=ITERS)
 
     # top-NPROBE cells per query by packed integer distance, from the
-    # driver-held literal centroids (k*dim ints — the BPE-argmax contract)
-    packed_all = F.array(
-        *[
-            F.aggregate(
-                F.zip_with(
-                    F.col("qv"),
-                    F.array(*[F.lit(int(v)) for v in vec]),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-            * F.lit(K)
-            + F.lit(cid)
-            for cid, vec in centroids
-        ]
-    )
-    probe = (
-        qvec.where(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.explode(
-                F.slice(F.array_sort(packed_all), 1, NPROBE)
-            ).alias("__packed"),
-        )
-        .select("qid", (F.col("__packed") % F.lit(K)).alias("cluster_id"))
+    # driver-held centroids (k*dim ints — the BPE-argmax contract)
+    probe = qvec.where(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("qid"),
+        F.explode(_probe_cells_udf(centroids, K, NPROBE)(F.col("qv"))).alias(
+            "cluster_id"
+        ),
     )
     cand = (
         probe.join(assigned, "cluster_id")
@@ -295,6 +262,18 @@ def sim_ivf_det_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rank") <= TOPK)
         .select("qid", "cand_id", "score_q", "rank")
     )
+
+
+def _parquet_files(root: str, *rels: str) -> set[str]:
+    """Every parquet file under ``root``'s ``rels`` directories — the
+    append-only check compares this set before and after an append."""
+    return {
+        os.path.join(dp, n)
+        for rel in rels
+        for dp, _, ns in os.walk(os.path.join(root, rel))
+        for n in ns
+        if n.endswith(".parquet")
+    }
 
 
 def _train_ctes(k: int, iters: int) -> str:
@@ -421,8 +400,6 @@ def sim_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched), and probed by reading ONLY the probed cells' partitions
     (raise-proven per run). Train→persist→append→probe→rescore, all
     exact integers, one recursive-CTE oracle."""
-    import os as _os
-
     from telemetry_parquet_spark.datapipe.ann_index import (
         append_vectors,
         build_ivf_table,
@@ -431,25 +408,16 @@ def sim_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from telemetry_parquet_spark.ml.kmeans_det import quantize_vectors
     from telemetry_parquet_spark.sources.skipping import materialize_cached
 
-    src = _os.path.join(sf_dir, "embeddings.parquet")
+    src = os.path.join(sf_dir, "embeddings.parquet")
 
     def build(root: str) -> None:
         qvec = quantize_vectors(load_table(spark, sf_dir, "embeddings"))
         train = qvec.where(F.col("vec_id") % 10 != 9)
         hold = qvec.where(F.col("vec_id") % 10 == 9)
         build_ivf_table(spark, root, train, k=K_IDX, iters=ITERS_IDX)
-
-        def _files(d):
-            return {
-                _os.path.join(dp, n)
-                for dp, _, ns in _os.walk(d)
-                for n in ns
-                if n.endswith(".parquet")
-            }
-
-        before = _files(_os.path.join(root, "postings"))
+        before = _parquet_files(root, "postings")
         append_vectors(spark, root, hold, k=K_IDX)
-        after = _files(_os.path.join(root, "postings"))
+        after = _parquet_files(root, "postings")
         if not before < after:
             raise RuntimeError(
                 "incremental append rewrote or dropped index files"
@@ -457,7 +425,7 @@ def sim_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = materialize_cached(
         spark, src,
-        "ivfidx_embeddings_" + _os.path.basename(sf_dir.rstrip("/")),
+        "ivfidx_embeddings_" + os.path.basename(sf_dir.rstrip("/")),
         build,
     )
     qvec = quantize_vectors(load_table(spark, sf_dir, "embeddings"))
@@ -593,8 +561,6 @@ def sim_ivfpq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVFPQ (Jégou et al.), by_residual=False so the whole
     train→encode→append→probe→ADC→rescore lifecycle is exact integers
     under one recursive-CTE oracle."""
-    import os as _os
-
     from telemetry_parquet_spark.datapipe.ann_index import (
         append_vectors_pq,
         build_ivfpq_table,
@@ -603,7 +569,7 @@ def sim_ivfpq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from telemetry_parquet_spark.ml.kmeans_det import quantize_vectors
     from telemetry_parquet_spark.sources.skipping import materialize_cached
 
-    src = _os.path.join(sf_dir, "embeddings.parquet")
+    src = os.path.join(sf_dir, "embeddings.parquet")
 
     def build(root: str) -> None:
         qvec = quantize_vectors(load_table(spark, sf_dir, "embeddings"))
@@ -613,22 +579,9 @@ def sim_ivfpq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, root, train, k=K_PQ, iters=ITERS_PQ,
             m_sub=M_SUB, k_code=K_CODE,
         )
-
-        def _files(d):
-            return {
-                _os.path.join(dp, n)
-                for dp, _, ns in _os.walk(d)
-                for n in ns
-                if n.endswith(".parquet")
-            }
-
-        before = _files(_os.path.join(root, "postings")) | _files(
-            _os.path.join(root, "vectors")
-        )
+        before = _parquet_files(root, "postings", "vectors")
         append_vectors_pq(spark, root, hold, k=K_PQ)
-        after = _files(_os.path.join(root, "postings")) | _files(
-            _os.path.join(root, "vectors")
-        )
+        after = _parquet_files(root, "postings", "vectors")
         if not before < after:
             raise RuntimeError(
                 "incremental IVF-PQ append rewrote or dropped index files"
@@ -636,7 +589,7 @@ def sim_ivfpq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = materialize_cached(
         spark, src,
-        "ivfpqidx_embeddings_" + _os.path.basename(sf_dir.rstrip("/")),
+        "ivfpqidx_embeddings_" + os.path.basename(sf_dir.rstrip("/")),
         build,
     )
     qvec = quantize_vectors(load_table(spark, sf_dir, "embeddings"))

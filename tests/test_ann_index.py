@@ -1,10 +1,15 @@
 """Persisted IVF index table (datapipe/ann_index.py): build layout,
 frozen-quantizer incremental appends, partition-pruned probes, and
-equivalence of the appended index with a frozen-assign rebuild."""
+equivalence of the appended index with a frozen-assign rebuild.
+
+Each index is built once per module (a k-means build is the expensive
+step); every test gets its own ``copytree`` of it, so tests that append
+or compact still start from the pristine build."""
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,13 +33,20 @@ def _qvec(spark, sf_dir):
     return quantize_vectors(load_table(spark, sf_dir, "embeddings"))
 
 
-@pytest.fixture()
-def index(spark, sf_dir, tmp_path):
-    root = str(tmp_path / "ivfidx")
+@pytest.fixture(scope="module")
+def built_index(spark, sf_dir, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("ann") / "ivfidx")
     qvec = _qvec(spark, sf_dir)
     build_ivf_table(
         spark, root, qvec.where(F.col("vec_id") % 10 != 9), k=K, iters=ITERS
     )
+    return root
+
+
+@pytest.fixture()
+def index(built_index, tmp_path):
+    root = str(tmp_path / "ivfidx")
+    shutil.copytree(built_index, root)
     return root
 
 
@@ -237,14 +249,21 @@ from telemetry_parquet_spark.datapipe.ann_index import (  # noqa: E402
 K_PQ, M_SUB, K_CODE = 8, 4, 8
 
 
-@pytest.fixture()
-def pq_index(spark, sf_dir, tmp_path):
-    root = str(tmp_path / "ivfpqidx")
+@pytest.fixture(scope="module")
+def built_pq_index(spark, sf_dir, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("ann") / "ivfpqidx")
     qvec = _qvec(spark, sf_dir)
     build_ivfpq_table(
         spark, root, qvec.where(F.col("vec_id") % 10 != 9),
         k=K_PQ, iters=ITERS, m_sub=M_SUB, k_code=K_CODE,
     )
+    return root
+
+
+@pytest.fixture()
+def pq_index(built_pq_index, tmp_path):
+    root = str(tmp_path / "ivfpqidx")
+    shutil.copytree(built_pq_index, root)
     return root
 
 

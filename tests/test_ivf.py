@@ -3,66 +3,65 @@ brute-force top-k when the query's cell(s) are probed."""
 
 from __future__ import annotations
 
-from telemetry_parquet_spark.datapipe.ivf import build_ivf_index, ivf_top_k
-from telemetry_parquet_spark.datapipe.similarity import brute_force_top_k
+import os
+
+from pyspark.sql import functions as F
+
+from telemetry_parquet_spark.datapipe.ann_index import (
+    build_ivf_table,
+    ivf_table_topk,
+)
+from telemetry_parquet_spark.ml.kmeans_det import quantize_vectors
 from telemetry_parquet_spark.sources.tables import load_table
 
+N_CELLS, TOPK = 8, 5
 
-def test_ivf_recovers_bruteforce_topk(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in emb.where("vec_id = 0").first().embedding]
 
-    index = build_ivf_index(emb, n_cells=8)
+def test_ivf_recovers_bruteforce_topk(spark, sf_dir, tmp_path):
+    qvec = quantize_vectors(load_table(spark, sf_dir, "embeddings"))
+    root = str(tmp_path / "ivfidx")
+    build_ivf_table(spark, root, qvec, k=N_CELLS, iters=2)
+    posts = (
+        spark.read.parquet(os.path.join(root, "postings"))
+        .select("vec_id", "qv", "cluster_id")
+        .collect()
+    )
     # all vectors assigned to exactly one cell
-    assert index.assigned.count() == emb.count()
-    assert index.assigned.select("cell_id").distinct().count() <= 8
+    assert sorted(p.vec_id for p in posts) == sorted(
+        r.vec_id for r in qvec.select("vec_id").collect()
+    )
+    assert len({p.cluster_id for p in posts}) <= N_CELLS
 
-    exact = [r.vec_id for r in brute_force_top_k(emb, qvec, k=5).collect()]
+    queries = qvec.where(F.col("vec_id") < 3)
+    # the brute-force top-k: exact dot product over ALL vectors, self
+    # excluded, ordered by (score desc, id asc) — in plain Python integers
+    exact = {}
+    for q in queries.select("vec_id", "qv").collect():
+        ranked = sorted(
+            (-sum(a * b for a, b in zip(q.qv, p.qv)), p.vec_id)
+            for p in posts
+            if p.vec_id != q.vec_id
+        )[:TOPK]
+        exact[q.vec_id] = [
+            (cand, -neg, rank)
+            for rank, (neg, cand) in enumerate(ranked, start=1)
+        ]
+
+    def probe(nprobe):
+        out = {}
+        for r in ivf_table_topk(
+            spark, root, queries, k=N_CELLS, nprobe=nprobe, topk=TOPK,
+            require_pruned=True,
+        ).collect():
+            out.setdefault(r.qid, []).append((r.cand_id, r.score_q, r.rank))
+        return {q: sorted(rs, key=lambda t: t[2]) for q, rs in out.items()}
+
     # probing every cell == brute force (sanity ceiling)
-    full = [r.vec_id for r in ivf_top_k(index, qvec, k=5, nprobe=8).collect()]
-    assert full == exact
+    assert probe(N_CELLS) == exact
 
     # probing half the cells: recall of the top-5 should be high on this
     # fixture (the query vector's own cell holds its near neighbors)
-    approx = [r.vec_id for r in ivf_top_k(index, qvec, k=5, nprobe=4).collect()]
-    assert len(set(approx) & set(exact)) >= 3
-    assert approx[0] == 0  # the query vector itself is always found
-
-
-def test_ivf_many_cells_constant_codegen(spark, sf_dir):
-    """A realistic 100 TB index has hundreds-to-thousands of cells; the cell
-    assignment must stay ONE fold over a literal centroid array, not a
-    per-centroid chained CASE WHEN that outgrows the JVM codegen limits."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in emb.where("vec_id = 0").first().embedding]
-
-    index = build_ivf_index(emb, n_cells=256, assignment="expr")
-    plan = index.assigned._jdf.queryExecution().toString()
-    # the argmin is array_min(transform(...)) — no CASE WHEN chain scaling
-    # with n_cells in the analyzed plan
-    assert plan.count("CASE WHEN") <= 2
-    assert index.assigned.count() == emb.count()
-
-    # full probe over 256 cells still reproduces brute force exactly
-    exact = [r.vec_id for r in brute_force_top_k(emb, qvec, k=5).collect()]
-    full = [r.vec_id for r in ivf_top_k(index, qvec, k=5, nprobe=256).collect()]
-    assert full == exact
-
-
-def test_ivf_pandas_assignment_full_probe_exact(spark, sf_dir):
-    """The Arrow numpy-matmul assignment (the auto path above 4096
-    n_cells x dim) must keep the exactness ceiling: full probe over 256
-    cells == brute force, every vector in exactly one cell, and the plan
-    carries the assignment as ONE Arrow eval node (not a Python row UDF)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in emb.where("vec_id = 0").first().embedding]
-
-    index = build_ivf_index(emb, n_cells=256)  # auto -> pandas at 256x64
-    plan = index.assigned._jdf.queryExecution().toString()
-    assert "ArrowEvalPython" in plan, plan
-    assert index.assigned.count() == emb.count()
-    assert index.assigned.where("cell_id < 0 OR cell_id >= 256").count() == 0
-
-    exact = [r.vec_id for r in brute_force_top_k(emb, qvec, k=5).collect()]
-    full = [r.vec_id for r in ivf_top_k(index, qvec, k=5, nprobe=256).collect()]
-    assert full == exact
+    approx = probe(N_CELLS // 2)
+    for q, want in exact.items():
+        got = {cand for cand, _, _ in approx.get(q, [])}
+        assert len(got & {cand for cand, _, _ in want}) >= 3

@@ -65,18 +65,6 @@ def test_iterations_do_not_worsen_inertia(spark, qvec):
     assert inertia(4) <= inertia(1)
 
 
-def test_matmul_assignment_bit_identical_to_expr(spark, qvec):
-    """The int64 numpy-matmul assignment and the literal-centroid codegen
-    fold compute the SAME packed min(d2*k + cid) integers, so a full fit
-    under each must agree on every assignment and every centroid — the
-    equality gate that lets k>=256 runs use the matmul path while the
-    recursive oracle stays authoritative."""
-    a_expr, c_expr = kmeans_fit(qvec, k=8, iters=3, assignment="expr")
-    a_mm, c_mm = kmeans_fit(qvec, k=8, iters=3, assignment="matmul")
-    assert c_expr == c_mm
-    assert a_expr.exceptAll(a_mm).union(a_mm.exceptAll(a_expr)).count() == 0
-
-
 def test_sparse_ids_seed_exactly_k(spark, qvec):
     """Seeding survives sparse/hashed ids: with vec_ids shifted by 10^9 the
     fit still selects the k lowest ids, renumbers them 0..k-1, and
@@ -107,3 +95,25 @@ def test_centroid_table_matches_fit_centroids(spark, qvec):
     for cid, vec in centroids:
         for d, v in enumerate(vec, start=1):
             assert table[(cid, d)] == v
+
+
+def test_packed_distances_matches_python_reference():
+    """The int64 kernel equals the plain-integer definition d2*k + cid,
+    including exact distance ties (broken by the lower cid) and sparse,
+    unsorted cids."""
+    import numpy as np
+
+    from telemetry_parquet_spark.ml.kmeans_det import packed_distances
+
+    k = 8
+    centroids = [(5, [2, 0, -1]), (1, [0, 2, -1]), (6, [1_000_000, -3, 7])]
+    vecs = [[1, 1, -1], [0, 0, 0], [-1_000_000, 999_999, 5]]
+    got = packed_distances(centroids, k)(np.array(vecs, dtype=np.int64))
+    want = [
+        [sum((a - b) ** 2 for a, b in zip(v, c)) * k + cid
+         for cid, c in centroids]
+        for v in vecs
+    ]
+    assert got.tolist() == want
+    # [1, 1, -1] is equidistant from cids 5 and 1: the min picks cid 1
+    assert int(got[0].min()) % k == 1
