@@ -51,6 +51,7 @@ from telemetry_parquet_spark.ml.kmeans_det import (
     kmeans_fit,
     packed_distances,
 )
+from telemetry_parquet_spark.sources.tables import read_parquet
 
 _CENTROIDS = "centroids"
 _POSTINGS = "postings"
@@ -81,7 +82,7 @@ def build_ivf_table(
 
 def load_centroids(spark: SparkSession, root: str) -> list[tuple[int, list[int]]]:
     """The frozen coarse quantizer — k rows, driver-sized by contract."""
-    rows = spark.read.parquet(os.path.join(root, _CENTROIDS)).collect()
+    rows = read_parquet(spark, os.path.join(root, _CENTROIDS)).collect()
     return sorted(
         (int(r.cluster_id), [int(v) for v in r.cvec]) for r in rows
     )
@@ -118,7 +119,7 @@ def append_vectors(
         ]  # <= min(k, batch) rows — driver-sized
         if cells:
             existing = (
-                spark.read.parquet(os.path.join(root, _POSTINGS))
+                read_parquet(spark, os.path.join(root, _POSTINGS))
                 .where(F.col("cluster_id").isin(cells))
                 .select("vec_id")
             )
@@ -155,7 +156,7 @@ def stream_index_vectors(
     from telemetry_parquet_spark.ml.kmeans_det import quantize_vectors
 
     if schema is None:
-        schema = spark.read.parquet(src_path).schema
+        schema = read_parquet(spark, src_path).schema
 
     def feed(batch_df: DataFrame, batch_id: int) -> None:
         append_vectors(
@@ -207,7 +208,7 @@ def compact_index(spark: SparkSession, root: str) -> tuple[int, int]:
             shutil.rmtree(old_dir)
     shutil.rmtree(staged_dir, ignore_errors=True)
     before = _count(posts_dir)
-    posts = spark.read.parquet(posts_dir)
+    posts = read_parquet(spark, posts_dir)
     (
         posts.repartition("cluster_id")
         .write.partitionBy("cluster_id")
@@ -294,7 +295,7 @@ def ivf_table_topk(
         for c in r.cells
     ]
     cells = sorted({c for _, c in probe_pairs})
-    posts = spark.read.parquet(os.path.join(root, _POSTINGS)).where(
+    posts = read_parquet(spark, os.path.join(root, _POSTINGS)).where(
         F.col("cluster_id").isin(cells)
     )
     if require_pruned:
@@ -381,7 +382,7 @@ def _pq_encode_udf(cb: np.ndarray):
 
 
 def _load_codebook(spark: SparkSession, root: str) -> np.ndarray:
-    rows = spark.read.parquet(os.path.join(root, _CODEBOOK)).collect()
+    rows = read_parquet(spark, os.path.join(root, _CODEBOOK)).collect()
     m_sub = 1 + max(int(r.j) for r in rows)
     k_code = 1 + max(int(r.c) for r in rows)
     subdim = len(rows[0].sub)
@@ -538,7 +539,7 @@ def ivfpq_table_topk(
     probe_df = F.broadcast(
         spark.createDataFrame(probe_pairs, "qid long, cluster_id long")
     )
-    posts = spark.read.parquet(os.path.join(root, _POSTINGS)).where(
+    posts = read_parquet(spark, os.path.join(root, _POSTINGS)).where(
         F.col("cluster_id").isin(cells)
     )
     if require_pruned:
@@ -558,7 +559,7 @@ def ivfpq_table_topk(
         .where(F.col("__r") <= adc_m)
         .select("qid", "cand_id")
     )
-    vecs = spark.read.parquet(os.path.join(root, _VECTORS)).where(
+    vecs = read_parquet(spark, os.path.join(root, _VECTORS)).where(
         F.col("cluster_id").isin(cells)
     )
     if require_pruned:

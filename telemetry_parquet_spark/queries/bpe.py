@@ -21,7 +21,7 @@ from pyspark.sql.types import (
 )
 
 from telemetry_parquet_spark.queries.registry import query
-from telemetry_parquet_spark.sources.tables import load_table
+from telemetry_parquet_spark.sources.tables import load_table, read_parquet
 
 N_MERGES = 16
 
@@ -266,7 +266,7 @@ def encode_bpe_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"bpe_enc_n{N_MERGES}_" + _os.path.basename(sf_dir.rstrip("/")),
         build,
     )
-    enc = spark.read.parquet(_os.path.join(root, "enc"))
+    enc = read_parquet(spark, _os.path.join(root, "enc"))
     # global row_number over the PIECE VOCAB only (vocab-sized, like
     # vocab_table's rank) — never over the corpus
     piece_ids = (

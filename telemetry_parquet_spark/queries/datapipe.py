@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from telemetry_parquet_spark.queries.registry import query
-from telemetry_parquet_spark.sources.tables import load_table
+from telemetry_parquet_spark.sources.tables import load_table, read_parquet
 
 
 @query(
@@ -1143,7 +1143,7 @@ def dd_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "inc_nd_bands_s3h64b16m7_" + _os.path.basename(sf_dir.rstrip("/")),
         build,
     )
-    hist_bands = spark.read.parquet(_os.path.join(root, "bands"))
+    hist_bands = read_parquet(spark, _os.path.join(root, "bands"))
     return incremental_near_dup(
         new_day, history, threshold=0.5, history_bands=hist_bands
     )

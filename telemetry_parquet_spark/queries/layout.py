@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from telemetry_parquet_spark.queries.registry import query
-from telemetry_parquet_spark.sources.tables import load_table
+from telemetry_parquet_spark.sources.tables import load_table, read_parquet
 
 _BITS = 8
 
@@ -114,8 +114,8 @@ def skip_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, src, "skip_orders_" + os.path.basename(sf_dir.rstrip("/")),
         layout_col="o_orderdate",
     )
-    index = build_file_bloom_index(spark.read.parquet(data), "o_custkey")
-    probe = spark.read.parquet(data).agg(F.min("o_custkey")).first()[0]
+    index = build_file_bloom_index(read_parquet(spark, data), "o_custkey")
+    probe = read_parquet(spark, data).agg(F.min("o_custkey")).first()[0]
     return pruned_point_lookup(
         spark, data, index, "o_custkey", probe, require_pruning=True
     )
@@ -168,7 +168,7 @@ def scan_planned_mixed_predicates(spark: SparkSession, sf_dir: str) -> DataFrame
         spark, src, "skip_orders_" + os.path.basename(sf_dir.rstrip("/")),
         layout_col="o_orderdate",
     )
-    files = spark.read.parquet(data)
+    files = read_parquet(spark, data)
     lo = F.lit("1996-01-01").cast("timestamp")
     hi = F.lit("1997-06-30").cast("timestamp")
     probe = (
@@ -238,7 +238,7 @@ def scan_planned_zorder_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
         "zorder_lineitem_" + os.path.basename(sf_dir.rstrip("/")),
         x="l_partkey", y="l_suppkey",
     )
-    files = spark.read.parquet(data)
+    files = read_parquet(spark, data)
     b = files.agg(
         F.min("l_partkey").alias("pmin"), F.max("l_partkey").alias("pmax"),
         F.min("l_suppkey").alias("smin"), F.max("l_suppkey").alias("smax"),
@@ -313,7 +313,7 @@ def scan_planned_zorder3_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
         "zorder3_lineitem_" + os.path.basename(sf_dir.rstrip("/")),
         cols=cols,
     )
-    files = spark.read.parquet(data)
+    files = read_parquet(spark, data)
     b = files.agg(
         *[F.min(c).alias(f"mn_{c}") for c in cols],
         *[F.max(c).alias(f"mx_{c}") for c in cols],

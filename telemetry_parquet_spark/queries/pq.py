@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from telemetry_parquet_spark.queries.registry import query
-from telemetry_parquet_spark.sources.tables import load_table
+from telemetry_parquet_spark.sources.tables import load_table, read_parquet
 
 M = 8  # subspaces
 K = 16  # centroids per subspace
@@ -88,7 +88,7 @@ def _persisted_codes(spark, sf_dir):
         f"pq_codes_m{M}k{K}_" + _os.path.basename(sf_dir.rstrip("/")),
         build,
     )
-    return spark.read.parquet(_os.path.join(root, "codes"))
+    return read_parquet(spark, _os.path.join(root, "codes"))
 
 
 @query(

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from telemetry_parquet_spark.queries.registry import query
+from telemetry_parquet_spark.sources.tables import read_parquet
 
 
 def _events_stream_build(transform):
@@ -225,7 +226,7 @@ def stream_stream_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # here. Set it first — every events read must be layout-adaptive
     # (see load_table); pinned by tests/test_ts_layouts.py.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     fix = _events_stream_build(lambda df: df)
 
     def tf(view_stream: DataFrame) -> DataFrame:

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from telemetry_parquet_spark.queries.registry import query
 from telemetry_parquet_spark.sources.skipping import materialize_cached
+from telemetry_parquet_spark.sources.tables import read_parquet
 
 # Money totals are keyed as BIGINT *cents* on BOTH engine and oracle
 # sides: the driver's canonicalizer renders trailing-zero DECIMAL cells
@@ -60,7 +61,7 @@ def _time_travel_chain(spark: SparkSession, sf_dir: str) -> str:
     src = os.path.join(sf_dir, "orders.parquet")
 
     def build(root: str) -> None:
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         append(spark, root, orders.where(F.col("o_orderkey") % 10 < 7))
         append(spark, root, orders.where(F.col("o_orderkey") % 10 >= 7))
         delete_where(spark, root, "o_orderpriority = '1-URGENT'")
@@ -160,7 +161,7 @@ def snapshot_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).withColumn("o_orderpriority", F.lit("MERGED"))
 
     def build(root: str) -> None:
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         append(spark, root, orders.where(F.col("o_orderkey") % 10 < 7))
         merge_into(spark, root, source_df(orders), keys=["o_orderkey"])
 
@@ -230,7 +231,7 @@ def snapshot_merge_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(sf_dir, "orders.parquet")
 
     def build(root: str) -> None:
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         append(spark, root, orders.where(F.col("o_orderkey") % 10 < 7))
         orders.where(
             (F.col("o_orderkey") % 20 < 4) | (F.col("o_orderkey") % 10 == 8)
@@ -318,7 +319,7 @@ def snapshot_merge_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(sf_dir, "orders.parquet")
 
     def build(root: str) -> None:
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         append(spark, root, orders.where(F.col("o_orderkey") % 10 < 7))
         orders.where(F.col("o_orderkey") % 20 < 4).withColumn(
             "o_orderpriority", F.lit("SRC")
@@ -398,12 +399,13 @@ def snapshot_zorder_planned(spark: SparkSession, sf_dir: str) -> DataFrame:
         append,
         compact_table,
         snapshot_files,
+        snapshot_schema,
     )
 
     src = os.path.join(sf_dir, "lineitem.parquet")
 
     def build(root: str) -> None:
-        li = spark.read.parquet(src)
+        li = read_parquet(spark, src)
         for i in range(4):
             append(spark, root, li.where(F.col("l_orderkey") % 4 == i))
         compact_table(
@@ -416,7 +418,8 @@ def snapshot_zorder_planned(spark: SparkSession, sf_dir: str) -> DataFrame:
         build,
     )
     paths = snapshot_files(root)
-    files = spark.read.parquet(*paths)
+    schema = snapshot_schema(root)
+    files = read_parquet(spark, paths, schema)
     b = files.agg(
         F.min("l_partkey").alias("pmin"), F.max("l_partkey").alias("pmax"),
         F.min("l_suppkey").alias("smin"), F.max("l_suppkey").alias("smax"),
@@ -432,6 +435,7 @@ def snapshot_zorder_planned(spark: SparkSession, sf_dir: str) -> DataFrame:
         [Range("l_partkey", p_lo, p_hi), Range("l_suppkey", s_lo, s_hi)],
         stats=stats,
         require_each_pruning=True,
+        schema=schema,
     )
     return pruned.select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
@@ -516,7 +520,7 @@ def snapshot_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(sf_dir, "orders.parquet")
 
     def build(root: str) -> None:
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         append(spark, root, orders.where(F.col("o_orderkey") % 10 < 7))
         append(spark, root, orders.where(F.col("o_orderkey") % 10 >= 7))
         delete_where_mor(spark, root, "o_orderpriority = '1-URGENT'")
@@ -595,7 +599,7 @@ def snapshot_mor_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(sf_dir, "orders.parquet")
 
     def build(root: str) -> None:
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         append(spark, root, orders)
         update_where_mor(
             spark, root, "o_orderpriority = '1-URGENT'",
@@ -714,7 +718,7 @@ def snapshot_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(sf_dir, "lineitem.parquet")
 
     def build(root: str) -> None:
-        li = spark.read.parquet(src)
+        li = read_parquet(spark, src)
         append(
             spark, root,
             li.repartitionByRange(16, F.col("l_orderkey")),
@@ -724,7 +728,7 @@ def snapshot_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, src, "snapst_lineitem_" + os.path.basename(sf_dir.rstrip("/")),
         build,
     )
-    b = spark.read.parquet(src).agg(
+    b = read_parquet(spark, src).agg(
         F.min("l_orderkey").alias("kmin"), F.max("l_orderkey").alias("kmax")
     ).first()
     lo = b.kmin + _math.floor((b.kmax - b.kmin) * 0.40)
@@ -790,7 +794,7 @@ def snapshot_bloom_planned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
 
     def build(root: str) -> None:
-        li = spark.read.parquet(src).withColumn("l_pricekey", pricekey)
+        li = read_parquet(spark, src).withColumn("l_pricekey", pricekey)
         append(
             spark, root,
             li.where(F.col("l_orderkey") % 10 < 7)
@@ -814,13 +818,13 @@ def snapshot_bloom_planned(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, src, "snapbl_lineitem_" + os.path.basename(sf_dir.rstrip("/")),
         build,
     )
-    b = spark.read.parquet(src).agg(
+    b = read_parquet(spark, src).agg(
         F.min("l_orderkey").alias("kmin"), F.max("l_orderkey").alias("kmax")
     ).first()
     lo = b.kmin + _math.floor((b.kmax - b.kmin) * 0.40)
     hi = b.kmin + _math.floor((b.kmax - b.kmin) * 0.60)
     pk = (
-        spark.read.parquet(src)
+        read_parquet(spark, src)
         .where(F.col("l_orderkey").between(lo, hi))
         .agg(F.min(pricekey))
         .first()[0]
@@ -873,7 +877,7 @@ def snapshot_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(sf_dir, "orders.parquet")
 
     def build(root: str) -> None:
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         dec = F.col("o_orderkey") % 10
         append(spark, root, orders.where(dec < 6))
         stage_append(spark, root, orders.where(dec.isin(6, 7)), "good")
@@ -959,7 +963,7 @@ def snapshot_merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(sf_dir, "orders.parquet")
 
     def build(root: str) -> None:
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         append(spark, root, orders.where(F.col("o_orderkey") % 10 < 7))
         source = (
             orders.where(
@@ -1080,7 +1084,7 @@ def mv_rewrite_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(sf_dir, "orders.parquet")
 
     def build(root: str) -> None:
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         base, view = os.path.join(root, "base"), os.path.join(root, "view")
         append(spark, base, orders.where(F.col("o_orderkey") % 10 < 8))
         create_view(
@@ -1159,8 +1163,8 @@ def snapshot_join_planned(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(sf_dir, "customer.parquet")
 
     def build(root: str) -> None:
-        customer = spark.read.parquet(src)
-        orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+        customer = read_parquet(spark, src)
+        orders = read_parquet(spark, os.path.join(sf_dir, "orders.parquet"))
         append(
             spark, os.path.join(root, "customer"),
             customer.repartitionByRange(16, "c_custkey"),
@@ -1239,7 +1243,7 @@ def snapshot_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(sf_dir, "orders.parquet")
 
     def build(root: str) -> None:
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         t = os.path.join(root, "t")
         append(spark, t, orders.where(F.col("o_orderkey") % 10 < 7))
         create_branch(t, "etl")
@@ -1320,8 +1324,8 @@ def catalog_txn_consistent_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(root: str) -> None:
         cat = Catalog(root)
-        orders = spark.read.parquet(src)
-        cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
+        orders = read_parquet(spark, src)
+        cust = read_parquet(spark, os.path.join(sf_dir, "customer.parquet"))
         cat.create_table(
             spark, "facts", orders.where(F.col("o_orderkey") % 10 < 8)
         )
@@ -1398,7 +1402,7 @@ def snapshot_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     tt_root = _time_travel_chain(spark, sf_dir)
 
     def build(root: str) -> None:
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         append(spark, root, orders)
         delete_where_mor(spark, root, "o_orderpriority = '1-URGENT'")
 
@@ -1450,7 +1454,7 @@ def snapshot_metadata_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(sf_dir, "lineitem.parquet")
 
     def build(root: str) -> None:
-        li = spark.read.parquet(src)
+        li = read_parquet(spark, src)
         append(spark, root, li.repartitionByRange(16, F.col("l_orderkey")))
 
     root = materialize_cached(
@@ -1511,8 +1515,8 @@ def catalog_sql_branch_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(root: str) -> None:
         cat = Catalog(root)
-        orders = spark.read.parquet(src)
-        cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
+        orders = read_parquet(spark, src)
+        cust = read_parquet(spark, os.path.join(sf_dir, "customer.parquet"))
         cat.create_table(
             spark, "facts", orders.where(F.col("o_orderkey") % 10 < 7)
         )
@@ -1609,10 +1613,10 @@ def jv_star_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         fact = os.path.join(root, "fact")
         dim = os.path.join(root, "dim")
         view = os.path.join(root, "view")
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         # equi-join views use USING semantics: align the dim key name
-        cust = spark.read.parquet(
-            os.path.join(sf_dir, "customer.parquet")
+        cust = read_parquet(
+            spark, os.path.join(sf_dir, "customer.parquet")
         ).withColumnRenamed("c_custkey", "o_custkey")
         append(spark, fact, orders.where(F.col("o_orderkey") % 10 < 7))
         append(spark, dim, cust)
@@ -1666,7 +1670,7 @@ def jv_star_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         modes = _json.load(fh)
     assert modes["fact_append"] == modes["fact_delete"] == "incremental"
     assert modes["dim_delete"] == "full"
-    return spark.read.parquet(os.path.join(root, "result"))
+    return read_parquet(spark, os.path.join(root, "result"))
 
 
 @query(
@@ -1717,7 +1721,7 @@ def snapshot_metadata_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(sf_dir, "orders.parquet")
 
     def build(root: str) -> None:
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         append(spark, root, orders.repartition(8))
         delete_where_mor(spark, root, "o_orderpriority = '1-URGENT'")
         update_where_mor(
@@ -1784,7 +1788,7 @@ def snapshot_metadata_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(sf_dir, "orders.parquet")
 
     def build(root: str) -> None:
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         # TPC-H's fixed priority domain; one append per class = a
         # clustered layout without any partitioning DDL
         for p in (
@@ -1856,7 +1860,7 @@ def snapshot_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(sf_dir, "orders.parquet")
 
     def build(root: str) -> None:
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         append(
             spark, root,
             orders.where(F.col("o_orderkey") % 10 < 6)
@@ -1884,7 +1888,7 @@ def snapshot_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         build,
     )
     probe = int(
-        spark.read.parquet(src).agg(F.min("o_custkey")).first()[0]
+        read_parquet(spark, src).agg(F.min("o_custkey")).first()[0]
     )
     pruned, plan = plan_snapshot_scan(
         spark, root, [Eq("o_custkey", probe)], require_pruning=True
@@ -1964,7 +1968,7 @@ def snapshot_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     csrc = os.path.join(sf_dir, "customer.parquet")
 
     def build_orders(root: str) -> None:
-        orders = spark.read.parquet(osrc)
+        orders = read_parquet(spark, osrc)
         append(spark, root, orders.where(F.col("o_orderkey") % 10 < 6))
         set_partition_spec(
             root, [PartitionField("o_custkey", "bucket", 8)]
@@ -1976,7 +1980,7 @@ def snapshot_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError("migration left untupled files")
 
     def build_customer(root: str) -> None:
-        append(spark, root, spark.read.parquet(csrc))
+        append(spark, root, read_parquet(spark, csrc))
         set_partition_spec(
             root, [PartitionField("c_custkey", "bucket", 8)]
         )
@@ -2295,7 +2299,7 @@ def snapshot_bucket_join_oneside(
     csrc = os.path.join(sf_dir, "customer.parquet")
 
     def build_orders(root: str) -> None:
-        orders = spark.read.parquet(osrc).withColumn(
+        orders = read_parquet(spark, osrc).withColumn(
             "okey3", (F.col("o_orderkey") % 3).cast("long")
         )
         append(spark, root, orders)
@@ -2305,7 +2309,7 @@ def snapshot_bucket_join_oneside(
         compact_table(spark, root, target_bytes=128 * 1024 * 1024)
 
     def build_customer(root: str) -> None:
-        append(spark, root, spark.read.parquet(csrc))  # never tupled
+        append(spark, root, read_parquet(spark, csrc))  # never tupled
 
     oroot = materialize_cached(
         spark, osrc,
@@ -2396,7 +2400,7 @@ def snapshot_bucket_join_composite(
     lsrc = os.path.join(sf_dir, "lineitem.parquet")
 
     def build_left(root: str) -> None:
-        li = spark.read.parquet(lsrc).select(
+        li = read_parquet(spark, lsrc).select(
             "l_orderkey", "l_linenumber", "l_quantity"
         )
         append(spark, root, li)
@@ -2407,7 +2411,7 @@ def snapshot_bucket_join_composite(
         compact_table(spark, root, target_bytes=128 * 1024 * 1024)
 
     def build_right(root: str) -> None:
-        ret = spark.read.parquet(lsrc).where(
+        ret = read_parquet(spark, lsrc).where(
             F.col("l_returnflag") == "R"
         ).select(
             F.col("l_orderkey").alias("r_orderkey"),
@@ -2510,7 +2514,7 @@ def _dpp_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     csrc = os.path.join(sf_dir, "customer.parquet")
 
     def build_orders(root: str) -> None:
-        orders = spark.read.parquet(osrc)
+        orders = read_parquet(spark, osrc)
         append(spark, root, orders.where(F.col("o_orderkey") % 10 < 6))
         set_partition_spec(
             root, [PartitionField("o_custkey", "bucket", 8)]
@@ -2522,7 +2526,7 @@ def _dpp_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             raise RuntimeError("migration left untupled files")
 
     def build_customer(root: str) -> None:
-        append(spark, root, spark.read.parquet(csrc))
+        append(spark, root, read_parquet(spark, csrc))
 
     tag = os.path.basename(sf_dir.rstrip("/"))
     oroot = materialize_cached(
@@ -2695,7 +2699,7 @@ def snapshot_delete_eq_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(root: str) -> None:
         tables = {"tgt": root}
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         append(spark, root, orders.where(F.col("o_orderkey") % 10 < 7))
         engine_sql(
             spark,
@@ -2797,7 +2801,7 @@ def snapshot_mor_equality_delete(
     src = os.path.join(sf_dir, "orders.parquet")
 
     def build(root: str) -> None:
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         t1 = orders.where(F.col("o_orderkey") % 10 < 6)
         append(spark, root, t1)
         vals = (
@@ -2878,7 +2882,7 @@ def snapshot_filtered_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(sf_dir, "orders.parquet")
 
     def build(root: str) -> None:
-        orders = spark.read.parquet(src)
+        orders = read_parquet(spark, src)
         for p in (
             "1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW",
         ):

@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from telemetry_parquet_spark.sources.tables import read_parquet
+
 
 def file_manifest(spark: SparkSession, path: str) -> DataFrame:
     """(file_path, file_size, n_rows) per data file — one row per physical
@@ -66,7 +68,7 @@ def file_manifest(spark: SparkSession, path: str) -> DataFrame:
         )
     )
     counts = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .groupBy(F.col("_metadata.file_path").alias("file_path"))
         .agg(F.count("*").alias("__n"))
     )
@@ -129,7 +131,7 @@ def compact(
         plan_rows, "file_path string, file_size long, group_id long"
     )
     n_groups = len({r.group_id for r in plan_rows})
-    data = spark.read.parquet(src_path).withColumn(
+    data = read_parquet(spark, src_path).withColumn(
         "__file", F.col("_metadata.file_path")
     )
     (
@@ -150,7 +152,7 @@ def read_compacted(spark: SparkSession, out_path: str) -> DataFrame:
     """Read a ``compact`` output with the SOURCE schema — drops the
     ``group_id`` layout column that partition discovery adds, so the
     compacted table is schema-identical to the table it re-laid out."""
-    return spark.read.parquet(out_path).drop("group_id")
+    return read_parquet(spark, out_path).drop("group_id")
 
 
 def maintenance_pass(

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from telemetry_parquet_spark.sources.tables import read_parquet
+
 # Parallel bit spread: 16 input bits to the even bit positions of 32.
 # (value, mask) pairs applied as x = (x | x << shift) & mask.
 _SPREAD_STEPS: tuple[tuple[int, int], ...] = (
@@ -266,7 +268,7 @@ def ensure_zorder_dataset(
     def write(out: str) -> None:
         (
             cluster_zorder_adaptive(
-                spark.read.parquet(src_path), x, y, n_files, bits=bits
+                read_parquet(spark, src_path), x, y, n_files, bits=bits
             )
             .drop("zval")
             .write.mode("overwrite")
@@ -371,7 +373,7 @@ def ensure_zorder_dataset_n(
 
     def write(out: str) -> None:
         keyed = zorder_key_adaptive_n(
-            spark.read.parquet(src_path), cols, bits=bits
+            read_parquet(spark, src_path), cols, bits=bits
         )
         (
             keyed.repartitionByRange(n_files, F.col("zval"))

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from telemetry_parquet_spark.sources import snapshots as S
 from telemetry_parquet_spark.sources.sql_front import engine_sql
+from telemetry_parquet_spark.sources.tables import read_parquet
 
 
 def _key(sql: str, tables: dict[str, str]) -> tuple[str, dict]:
@@ -72,7 +73,7 @@ def cached_sql(
     entry = os.path.join(cache_dir, digest)
     marker = os.path.join(entry, "_PINS.json")
     if os.path.exists(marker):
-        return spark.read.parquet(os.path.join(entry, "result")), True
+        return read_parquet(spark, os.path.join(entry, "result")), True
     # Execute AT THE PINNED VERSIONS, not at head: a commit landing
     # between the key computation and the scan would otherwise persist
     # newer data under this key's pins, and every later same-pin caller
@@ -94,7 +95,7 @@ def cached_sql(
         json.dump({"sql": sql, "pins": pins}, f)
     shutil.rmtree(entry, ignore_errors=True)
     os.replace(tmp, entry)
-    return spark.read.parquet(os.path.join(entry, "result")), False
+    return read_parquet(spark, os.path.join(entry, "result")), False
 
 
 def evict_stale(cache_dir: str) -> list[str]:

@@ -43,12 +43,14 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from telemetry_parquet_spark.sources.skipping import (
     NUM_BITS,
     NUM_HASHES,
     bloom_probe_files,
 )
+from telemetry_parquet_spark.sources.tables import read_parquet
 
 
 @dataclass(frozen=True)
@@ -163,6 +165,7 @@ def plan_scan(
     num_bits: int = NUM_BITS,
     num_hashes: int = NUM_HASHES,
     require_each_pruning: bool = False,
+    schema: StructType | None = None,
 ) -> tuple[DataFrame, ScanPlan]:
     """Compose min/max + Bloom pruning for ``predicates`` over the parquet
     table at ``data_path`` — a directory OR an explicit file list (e.g. a
@@ -176,9 +179,11 @@ def plan_scan(
     ``bloom_probe_files``, IN lists included). Mechanisms
     only remove files, so their composition is order-free; the residual
     filter guarantees exactness regardless. With ``require_each_pruning``
-    each wired mechanism must skip >= 1 file or the planner RAISES."""
+    each wired mechanism must skip >= 1 file or the planner RAISES.
+    ``schema`` is the table's recorded schema (a snapshot manifest's),
+    when the caller has one; otherwise ``read_parquet`` supplies it."""
     paths = data_path if isinstance(data_path, list) else [data_path]
-    reader = spark.read.parquet(*paths)
+    reader = read_parquet(spark, paths, schema)
     schema = reader.schema
     # enumerate files from the reader's file index (driver-side, O(files)
     # metadata ops) — the previous `_metadata.file_path` distinct+collect

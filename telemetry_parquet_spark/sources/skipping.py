@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from telemetry_parquet_spark.datapipe.bloom import _positions, _word_and_mask
+from telemetry_parquet_spark.sources.tables import read_parquet
 
 NUM_BITS = 1 << 16
 NUM_HASHES = 5
@@ -222,7 +223,7 @@ def pruned_point_lookup(
     full-scan filter because Bloom filters have no false negatives. With
     ``require_pruning`` the lookup RAISES unless at least one file was
     skipped — callers that claim skipping engaged get proof, not hope."""
-    reader = spark.read.parquet(data_path)
+    reader = read_parquet(spark, data_path)
     schema = reader.schema
     cands = bloom_candidate_files(index, value, num_bits, num_hashes)
     if require_pruning:
@@ -262,11 +263,11 @@ def update_file_bloom_index(
     contract); a rewritten path must drop its index rows first."""
     if existing is None:
         return build_file_bloom_index(
-            spark.read.parquet(data_path), key_col, num_bits, num_hashes
+            read_parquet(spark, data_path), key_col, num_bits, num_hashes
         )
     all_files = sorted(
         r.file_path
-        for r in spark.read.parquet(data_path)
+        for r in read_parquet(spark, data_path)
         .select(F.col("_metadata.file_path").alias("file_path"))
         .distinct()
         .collect()
@@ -277,7 +278,7 @@ def update_file_bloom_index(
     new_paths = [f for f in all_files if f not in known]
     if not new_paths:
         return existing
-    schema = spark.read.parquet(data_path).schema
+    schema = read_parquet(spark, data_path).schema
     fresh = build_file_bloom_index(
         spark.read.schema(schema).parquet(*new_paths),
         key_col,
@@ -347,7 +348,7 @@ def ensure_split_dataset(
 
     def write(out: str) -> None:
         (
-            spark.read.parquet(src_path)
+            read_parquet(spark, src_path)
             .repartitionByRange(n_files, F.col(layout_col))
             .write.mode("overwrite")
             .parquet(out)

@@ -69,6 +69,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from telemetry_parquet_spark.sources.tables import read_parquet
+
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
 
@@ -727,6 +729,11 @@ def _rel_file_expr(root: str, col: str = "_metadata.file_path"):
     )
 
 
+# every deletion-vector file's layout: the (__file, __pos) pair
+# ``_mor_write`` selects as (file, pos); reads pass it, so no read infers it
+DV_SCHEMA = "file string, pos long"
+
+
 def _scan_with_pos(
     spark: SparkSession,
     root: str,
@@ -748,7 +755,9 @@ def _scan_with_pos(
         F.col("_metadata.row_index").alias("__pos"),
     )
     if dv:
-        dv_df = spark.read.parquet(*[os.path.join(root, d) for d in dv])
+        dv_df = read_parquet(
+            spark, [os.path.join(root, d) for d in dv], DV_SCHEMA
+        )
         df = df.join(
             dv_df,
             on=(df["__file"] == dv_df["file"])
@@ -811,8 +820,9 @@ def _read_logical(
     for key in sorted(sig):
         df = _base(sig[key])
         for i in key:
-            vals = spark.read.parquet(
-                os.path.join(root, eq[i]["file"])
+            key_schema = StructType([schema[c] for c in eq[i]["cols"]])
+            vals = read_parquet(
+                spark, os.path.join(root, eq[i]["file"]), key_schema
             ).dropDuplicates()
             df = df.join(
                 F.broadcast(vals), on=list(eq[i]["cols"]), how="left_anti"
@@ -2892,8 +2902,8 @@ def table_changes(
     if dv_delta:
         dv_touched = {
             r.file
-            for r in spark.read.parquet(
-                *[os.path.join(root, d) for d in dv_delta]
+            for r in read_parquet(
+                spark, [os.path.join(root, d) for d in dv_delta], DV_SCHEMA
             )
             .select("file")
             .distinct()
@@ -2980,6 +2990,13 @@ def snapshot_files(root: str, version: int | None = None) -> list[str]:
     m = read_manifest(root, v)
     _require_no_dv(m, "snapshot_files")
     return [os.path.join(root, f) for f in m["files"]]
+
+
+def snapshot_schema(root: str, version: int | None = None) -> StructType:
+    """The schema recorded in ``version``'s manifest (default: head) —
+    what a raw read of ``snapshot_files`` returns, with no inference."""
+    v = latest_version(root) if version is None else version
+    return StructType.fromJson(json.loads(read_manifest(root, v)["schema"]))
 
 
 _TAG_DIR = "_tags"
@@ -3371,8 +3388,8 @@ def _publish_staged_mor(
         if is_update:
             subject = copies
         else:
-            doomed_pos = spark.read.parquet(
-                *[os.path.join(root, f) for f in dv_files]
+            doomed_pos = read_parquet(
+                spark, [os.path.join(root, f) for f in dv_files], DV_SCHEMA
             )
             scan = _read_logical(
                 spark, root, s["base_files"], schema, s["base_dv"], None,
@@ -3464,7 +3481,7 @@ def update_snapshot_bloom(
         num_bits, num_hashes = meta["num_bits"], meta["num_hashes"]
         covered = {
             r.file_path
-            for r in spark.read.parquet(idx_dir)
+            for r in read_parquet(spark, idx_dir)
             .select("file_path")
             .distinct()
             .collect()
@@ -3617,7 +3634,7 @@ def plan_snapshot_scan(
 
             with open(os.path.join(idx_dir, "_BLOOM_META.json")) as f:
                 bm = json.load(f)
-            index = spark.read.parquet(idx_dir)
+            index = read_parquet(spark, idx_dir)
             covered = {
                 r.file_path
                 for r in index.select("file_path").distinct().collect()

@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from telemetry_parquet_spark.sources.tables import read_parquet
+
 
 def dataset_path(base: str, name: str, version: int) -> str:
     """``<base>/<name>/v<version>`` — the reference's versioned layout."""
@@ -162,8 +164,8 @@ def compact_dataset(
         # holds exactly the partition's rows (a value that fails to
         # round-trip through the filter would otherwise silently empty
         # the partition)
-        before = spark.read.parquet(pdir).count()
-        after = spark.read.parquet(tmp).count()
+        before = read_parquet(spark, pdir).count()
+        after = read_parquet(spark, tmp).count()
         if before != after:
             shutil.rmtree(tmp)
             raise RuntimeError(
@@ -257,7 +259,7 @@ def footer_stats(
         aggs = [F.count("*").alias("cnt")]
         aggs += [F.min(c).alias(f"min_{c}") for c in min_cols]
         aggs += [F.max(c).alias(f"max_{c}") for c in max_cols]
-        agg = spark.read.parquet(path).agg(*aggs)
+        agg = read_parquet(spark, path).agg(*aggs)
         plan = agg._jdf.queryExecution().executedPlan().toString()
         if "BatchScan" not in plan or "count(*)" not in plan:
             raise RuntimeError(

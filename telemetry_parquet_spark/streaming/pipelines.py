@@ -23,6 +23,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from telemetry_parquet_spark.sources.tables import read_parquet
+
 # Progress reports of the most recent run_available_now replay — runtime
 # evidence (micro-batches, rows, state-store sizes) consumed by
 # plans/audit.py, since streaming plans cannot be audited statically.
@@ -178,7 +180,7 @@ def run_available_now(
     replays (32 stores ≈ 5 s vs 8 ≈ 1.2 s at sf0.1). Size it to key
     cardinality in production; the conf is restored after the run."""
     if schema is None:
-        schema = spark.read.parquet(parquet_path).schema
+        schema = read_parquet(spark, parquet_path).schema
     # the file source wants a directory; a single-file table is streamed by
     # glob-filtering its parent directory
     import os
@@ -284,7 +286,7 @@ def stream_append_parquet(
     maintenance_pass`` cleans up once a partition is closed. Synchronous;
     each call drains whatever arrived since the last one."""
     if schema is None:
-        schema = spark.read.parquet(src_path).schema
+        schema = read_parquet(spark, src_path).schema
     stream = _file_stream_reader(spark, src_path, schema)
     q = (
         stream.writeStream.format("parquet")
@@ -325,7 +327,7 @@ def stream_commit_snapshots(
     from telemetry_parquet_spark.sources import snapshots as S
 
     if schema is None:
-        schema = spark.read.parquet(src_path).schema
+        schema = read_parquet(spark, src_path).schema
     ckpt_tag = _os.path.abspath(checkpoint)
 
     def commit_batch(batch_df, batch_id: int) -> None:
@@ -383,7 +385,7 @@ def _file_stream_reader(spark: SparkSession, src_path: str, schema):
     import os as _os
 
     if schema is None:
-        schema = spark.read.parquet(src_path).schema
+        schema = read_parquet(spark, src_path).schema
     reader = spark.readStream.schema(schema).format("parquet")
     if _os.path.isfile(src_path):
         reader = reader.option(
@@ -496,7 +498,7 @@ def stream_commit_catalog_txn(
     import os as _os
 
     if schema is None:
-        schema = spark.read.parquet(src_path).schema
+        schema = read_parquet(spark, src_path).schema
     tag = _os.path.abspath(checkpoint)
 
     def commit_batch(batch_df, batch_id: int) -> None:
@@ -539,7 +541,7 @@ def stream_commit_branch(
     from telemetry_parquet_spark.sources import branches as B
 
     if schema is None:
-        schema = spark.read.parquet(src_path).schema
+        schema = read_parquet(spark, src_path).schema
     ckpt_tag = _os.path.abspath(checkpoint)
 
     def commit_batch(batch_df, batch_id: int) -> None:

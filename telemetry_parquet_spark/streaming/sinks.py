@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from telemetry_parquet_spark.sources.tables import read_parquet
+
 BATCH_COL = "__batch_id"
 
 
@@ -57,4 +59,4 @@ def partitioned_foreach_batch_sink(
 def read_partitioned_sink(spark, path: str) -> DataFrame:
     """The sink's logical content: the dataset without the
     ``__batch_id`` bookkeeping column."""
-    return spark.read.parquet(path).drop(BATCH_COL)
+    return read_parquet(spark, path).drop(BATCH_COL)
