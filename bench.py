@@ -136,9 +136,6 @@ HEADLINE = [
     # BM25 ranked retrieval (broadcast query-term prune + 1-row stats
     # broadcast + order-independent integer-sum scoring)
     "bm25_topk_docs",
-    # batch KNN join / KNN-graph (broadcast query batch × corpus scan,
-    # linear in the corpus; per-query rank window)
-    "sim_knn_graph",
     # full-corpus KNN graph via signature-bucket equi-join (Σ|bucket|²,
     # never corpus²) — the corpus-sized-batch scale path, exactly oracled
     "sim_knn_graph_lsh",
@@ -202,6 +199,8 @@ HEADLINE = [
     "scan_planned_zorder3_ranges",
     # round 9: dense batch KNN — one integer matmul per corpus Arrow
     # batch, per-partition top-k trim, k*n_queries*partitions-row shuffle
+    # (the only batch-KNN row since its float twin sim_knn_graph was
+    # deleted)
     "sim_matmul_batch_topk",
     # round 9: versioned snapshot table — append/append/delete/compact
     # commit chain + four time-travel reads (warehouse-cached build, so

@@ -1,11 +1,16 @@
 #!/usr/bin/env python
 """Sweep the LSH KNN-graph cost/recall frontier: bits ∈ {4,6,8} ×
-multiprobe ∈ {off,on} against the exact corpus² top-k graph.
+multiprobe ∈ {off,on}, plus multi-table configs, against the exact
+corpus² top-k graph.
 
-Records, per config: wall time of the full-corpus graph build (count()
-action, residue cleared between runs, min of 2) and recall@k = |approx ∩
-exact| / |exact| over all (query, neighbor) edges. Output: a markdown
-table for SCALE.md.
+Both sides are the integer micro-cosine kernels of
+``datapipe/similarity.py``: the exact graph is ``matmul_batch_top_k``
+(every vector is a query) and each config is
+``lsh_probe_matmul_top_k(self_corpus=True)`` over the quantized
+hyperplane family (``int_sigs_udf``). Records, per config: wall time of
+the full-corpus graph build (count() action, residue cleared between
+runs, min of 2) and recall@k = |approx ∩ exact| / |exact| over all
+(query, neighbor) edges. Output: a markdown table for SCALE.md.
 
     python scripts/lsh_frontier.py [sf_dir]
 """
@@ -21,8 +26,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from telemetry_parquet_spark.datapipe.similarity import (  # noqa: E402
-    lsh_bucket_top_k,
-    pairwise_top_k,
+    lsh_probe_matmul_top_k,
+    matmul_batch_top_k,
 )
 from telemetry_parquet_spark.session import (  # noqa: E402
     clear_cached_relations,
@@ -44,7 +49,7 @@ def main(sf_dir: str = "/root/testdata/sf0.1") -> None:
     # the residue clearing below, unlike a localCheckpoint)
     exact_set = {
         (r["query_id"], r["vec_id"])
-        for r in pairwise_top_k(queries, emb, k=K, exclude_self=True)
+        for r in matmul_batch_top_k(queries, emb, k=K, exclude_self=True)
         .select("query_id", "vec_id")
         .collect()
     }
@@ -68,19 +73,20 @@ def main(sf_dir: str = "/root/testdata/sf0.1") -> None:
         (8, True, 4),
     ]
     for bits, probe, tables in configs:
+
+        def graph():
+            return lsh_probe_matmul_top_k(
+                queries, emb, dim=64, bits=bits, k=K, exclude_self=True,
+                multiprobe=probe, tables=tables, self_corpus=True,
+            )
+
         wall = float("inf")
         for _ in range(2):
             t0 = time.perf_counter()
-            lsh_bucket_top_k(
-                queries, emb, dim=64, bits=bits, k=K,
-                exclude_self=True, multiprobe=probe, tables=tables,
-            ).count()
+            graph().count()
             wall = min(wall, time.perf_counter() - t0)
             clear_cached_relations(spark)
-        approx = lsh_bucket_top_k(
-            queries, emb, dim=64, bits=bits, k=K,
-            exclude_self=True, multiprobe=probe, tables=tables,
-        ).select("query_id", "vec_id").collect()
+        approx = graph().select("query_id", "vec_id").collect()
         hits = sum(
             (r["query_id"], r["vec_id"]) in exact_set for r in approx
         )

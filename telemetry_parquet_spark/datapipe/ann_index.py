@@ -51,6 +51,7 @@ from telemetry_parquet_spark.ml.kmeans_det import (
     kmeans_fit,
     packed_distances,
 )
+from telemetry_parquet_spark.operators.topk import top_k_per_group
 from telemetry_parquet_spark.sources.tables import read_parquet
 
 _CENTROIDS = "centroids"
@@ -267,6 +268,26 @@ def _require_cell_pruned(df: DataFrame, cells: list[int], what: str) -> None:
         )
 
 
+def _rescore_rank(cand: DataFrame, qside: DataFrame, topk: int) -> DataFrame:
+    """The one exact rescore of both IVF probes: ``cand`` (qid, cand_id,
+    qv_c) joins the broadcast query side ``qside`` (qid, qv_q), scores
+    each pair by its int64 dot product (a JVM fold, exact in any order)
+    and keeps the ``topk`` best per query by (score_q desc, cand_id asc)
+    — the tie-free order the recursive-CTE oracles replay."""
+    dots = cand.join(qside, "qid").select(
+        "qid",
+        "cand_id",
+        F.aggregate(
+            F.zip_with("qv_q", "qv_c", lambda x, y: x * y),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        ).alias("score_q"),
+    )
+    return top_k_per_group(
+        dots, ["qid"], [F.desc("score_q"), F.asc("cand_id")], topk, "rank"
+    ).select("qid", "cand_id", "score_q", "rank")
+
+
 def ivf_table_topk(
     spark: SparkSession,
     root: str,
@@ -281,8 +302,6 @@ def ivf_table_topk(
     ``isin(probed cells)``; with ``require_pruned`` the files actually
     read are checked to live under probed cell directories (RAISES
     otherwise) — scan cost ∝ probed cells, proven per run."""
-    from pyspark.sql.window import Window as W
-
     centroids = load_centroids(spark, root)
     probe_pairs = [
         (int(r.qid), int(c))
@@ -311,21 +330,7 @@ def ivf_table_topk(
     qside = F.broadcast(
         queries.select(F.col("vec_id").alias("qid"), F.col("qv").alias("qv_q"))
     )
-    dots = cand.join(qside, "qid").select(
-        "qid",
-        "cand_id",
-        F.aggregate(
-            F.zip_with("qv_q", "qv_c", lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("score_q"),
-    )
-    w = W.partitionBy("qid").orderBy(F.desc("score_q"), F.asc("cand_id"))
-    return (
-        dots.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= topk)
-        .select("qid", "cand_id", "score_q", "rank")
-    )
+    return _rescore_rank(cand, qside, topk)
 
 
 # ---------------------------------------------------------------------------
@@ -505,8 +510,6 @@ def ivfpq_table_topk(
     to end (packed mins; (adc_dist, cand_id); (score desc, cand_id)),
     so one DuckDB recursive CTE replays the whole lifecycle
     (queries/kmeans.py::sim_ivfpq_persisted_topk)."""
-    from pyspark.sql.window import Window as W
-
     centroids = load_centroids(spark, root)
     cb = _load_codebook(spark, root)
     m_sub, k_code, subdim = cb.shape
@@ -553,12 +556,9 @@ def ivfpq_table_topk(
         .groupBy("qid", "cand_id")
         .agg(F.sum("d2").alias("adc_dist"))
     )
-    wa = W.partitionBy("qid").orderBy(F.asc("adc_dist"), F.asc("cand_id"))
-    survivors = (
-        adc.withColumn("__r", F.row_number().over(wa))
-        .where(F.col("__r") <= adc_m)
-        .select("qid", "cand_id")
-    )
+    survivors = top_k_per_group(
+        adc, ["qid"], [F.asc("adc_dist"), F.asc("cand_id")], adc_m, "__r"
+    ).select("qid", "cand_id")
     vecs = read_parquet(spark, os.path.join(root, _VECTORS)).where(
         F.col("cluster_id").isin(cells)
     )
@@ -568,25 +568,8 @@ def ivfpq_table_topk(
         [(int(r.vec_id), [int(v) for v in r.qv]) for r in qrows],
         "qid long, qv_q array<long>",
     ))
-    dots = (
-        survivors.join(
-            vecs.select(F.col("vec_id").alias("cand_id"),
-                        F.col("qv").alias("qv_c")),
-            "cand_id",
-        )
-        .join(qside, "qid")
-        .select(
-            "qid", "cand_id",
-            F.aggregate(
-                F.zip_with("qv_q", "qv_c", lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("score_q"),
-        )
+    cand = survivors.join(
+        vecs.select(F.col("vec_id").alias("cand_id"), F.col("qv").alias("qv_c")),
+        "cand_id",
     )
-    w = W.partitionBy("qid").orderBy(F.desc("score_q"), F.asc("cand_id"))
-    return (
-        dots.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= topk)
-        .select("qid", "cand_id", "score_q", "rank")
-    )
+    return _rescore_rank(cand, qside, topk)

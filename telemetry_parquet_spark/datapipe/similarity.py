@@ -1,14 +1,24 @@
 """Embedding similarity search over array<float> columns.
 
-Baseline: brute-force cosine top-k — the query side is broadcast, the dot
-product is a JVM-side higher-order fold in double precision, and top-k
-compiles to TakeOrderedAndProject (per-partition k-heaps, no global sort).
+Column expressions (``dot`` / ``norm`` / ``cosine``): a JVM-side
+higher-order fold in double precision. They serve the one-query
+brute-force top-k (``sim_brute_force_topk``: the query vector is
+broadcast and top-k compiles to TakeOrderedAndProject) and the
+embedding dedup / semantic operators.
 
-Scale path: LSH bucketing via random hyperplane signs (cosine-LSH) — each
-vector maps to a small bit signature; candidates come from an equi-join on
-the signature, cutting the compared set by ~2^bits. An IVF-style variant
-(cluster assignment with pyspark.ml KMeans, probe nearest centroids) uses the
-same final exact-rescore stage.
+Exact top-k kernels: both score integer micro-cosines over
+floor(x·10⁶ + 0.5)-quantized vectors and trim through ONE rule,
+(score desc, id asc) (``_trim_top_k``), in the per-batch trim and in the
+final rank window alike.
+
+- ``matmul_batch_top_k``: batch KNN. The bounded query batch rides into
+  a ``mapInPandas`` as a driver-side int64 matrix; one matmul per corpus
+  Arrow batch.
+- ``lsh_probe_matmul_top_k``: the corpus-sized-query scale path.
+  Random-hyperplane signatures over quantized planes (``int_sigs_udf``)
+  bucket both sides; each bucket is rescored by one int64 matmul.
+
+The persisted IVF and IVF-PQ indexes live in ``ann_index.py``.
 """
 
 from __future__ import annotations
@@ -18,6 +28,8 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from telemetry_parquet_spark.operators.topk import top_k_per_group
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -50,131 +62,8 @@ def cosine_presplit(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return F.when(d > 0, dot(a, b) / d).otherwise(F.lit(0.0))
 
 
-def brute_force_top_k(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    score_col: str = "cosine_sim",
-    round_digits: int | None = 6,
-) -> DataFrame:
-    """Exact cosine top-k against a constant query vector (broadcast as a
-    literal array — no join, no shuffle; only the top-k merge)."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    score = cosine(F.col(vec_col), q)
-    if round_digits is not None:
-        score = F.round(score, round_digits)
-    return (
-        df.select(F.col(id_col), score.alias(score_col))
-        .orderBy(F.desc(score_col), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def pairwise_top_k(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = False,
-) -> DataFrame:
-    """Top-k corpus neighbors for each query row — the query batch rides
-    into a ``mapInPandas`` as a driver-side float64 matrix (batch KNN
-    contract: n_queries is bounded, exactly the bound the previous
-    broadcast-join shape assumed), every corpus Arrow batch is scored in
-    ONE (batch × dim) @ (dim × n_queries) matmul, and each batch emits
-    only its per-query top-k — the corpus is touched once with NO join
-    and the only shuffle is the trimmed candidate set into the final
-    rank window. The earlier expression route materialized the full
-    |corpus|·|batch| pair set through an interpreted higher-order dot
-    fold (BroadcastNestedLoopJoin; guide §4's row-at-a-time boundary in
-    codegen clothing).
-
-    Semantics are unchanged from the expression route: cosine =
-    dot/(‖c‖·‖q‖) in float64, rows with a zero (or null) vector on
-    either side keep score 0.0, rounding is half-away-from-zero to 6
-    digits (Spark ``F.round``), and ties rank by (score desc, id asc).
-    The per-batch trim orders by that same key, so it is a superset of
-    the global top-k by construction. For large query sets use
-    ``lsh_bucket_top_k``. With ``exclude_self`` a corpus row whose id
-    equals the query id is dropped before ranking (the KNN-graph shape,
-    where the query batch is itself a slice of the corpus)."""
-    from pyspark.sql import Window as W
-
-    q_rows = queries.select(query_id, vec_col).collect()
-    qids = np.array([int(r[0]) for r in q_rows], dtype=np.int64)
-    nq = len(qids)
-    dim = next(
-        (len(r[1]) for r in q_rows if r[1] is not None), 1
-    )
-
-    def _to_mat(vals) -> np.ndarray:
-        # null vector -> zero vector: the expression route scored those
-        # rows 0.0 via the d > 0 guard, and a zero vector reproduces
-        # exactly that (denominator 0 -> score 0.0)
-        return np.stack(
-            [
-                np.zeros(dim)
-                if v is None
-                else np.asarray(v, dtype=np.float64)
-                for v in vals
-            ]
-        )
-
-    qm = _to_mat([r[1] for r in q_rows]) if nq else np.zeros((0, dim))
-    qn = np.sqrt((qm * qm).sum(axis=1))
-    out_schema = f"{query_id} long, {corpus_id} long, cosine_sim double"
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0 or nq == 0:
-                continue
-            cids = pdf[corpus_id].to_numpy(dtype=np.int64)
-            cm = _to_mat(pdf[vec_col])
-            cn = np.sqrt((cm * cm).sum(axis=1))
-            denom = cn[:, None] * qn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = np.where(denom > 0, (cm @ qm.T) / denom, 0.0)
-            # F.round(_, 6): HALF_UP = half away from zero
-            r = s * 1e6
-            cos = np.where(r >= 0, np.floor(r + 0.5), np.ceil(r - 0.5)) / 1e6
-            parts = []
-            for j in range(nq):
-                col, ids = cos[:, j], cids
-                if exclude_self:
-                    m_ok = ids != qids[j]
-                    col, ids = col[m_ok], ids[m_ok]
-                top = np.lexsort((ids, -col))[:k]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            query_id: qids[j],
-                            corpus_id: ids[top],
-                            "cosine_sim": col[top],
-                        }
-                    )
-                )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-
-    scored = corpus.select(F.col(corpus_id), F.col(vec_col)).mapInPandas(
-        score, out_schema
-    )
-    w = W.partitionBy(query_id).orderBy(
-        F.desc("cosine_sim"), F.asc(corpus_id)
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .drop("rnk")
-    )
-
-
 # ---------------------------------------------------------------------------
-# Cosine-LSH (random hyperplanes) — the scale path
+# Cosine-LSH (random hyperplanes)
 # ---------------------------------------------------------------------------
 
 
@@ -218,6 +107,13 @@ def quantize_plane(plane: list[float], scale: int = SIG_SCALE) -> list[int]:
     return [int(math.floor(x * scale + 0.5)) for x in plane]
 
 
+def _quantize(vecs, scale: int = SIG_SCALE) -> np.ndarray:
+    """(n × dim) int64 matrix of floor(x·scale + 0.5) — ``quantize_plane``
+    applied to a batch of vectors."""
+    m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+    return np.floor(m * float(scale) + 0.5).astype(np.int64)
+
+
 def int_sigs_udf(dim: int, bits: int, tables: int, seed: int = 42):
     """ALL tables' signatures in ONE Arrow pass: quantize the vector and
     every hyperplane to int64 (floor(x·10⁶ + 0.5)), take the integer
@@ -229,10 +125,8 @@ def int_sigs_udf(dim: int, bits: int, tables: int, seed: int = 42):
     ≈ 2·10¹⁴ < 2⁵³, so they are exact in int64 AND as int-valued doubles
     under ANY summation order — the oracle's `list_inner_product` over the
     same quantized lists yields bit-identical signs with no dependence on
-    either engine's fold order (stronger than the float-fold signature,
-    whose cross-engine equality leaned on both engines happening to sum
-    sequentially). Perf: replaces tables·bits interpreted per-element
-    folds per vector with one numpy matmul per Arrow batch."""
+    either engine's fold order. Perf: one numpy matmul per Arrow batch
+    instead of tables·bits interpreted per-element folds per vector."""
     planes = [
         p
         for t in range(tables)
@@ -247,9 +141,7 @@ def int_sigs_udf(dim: int, bits: int, tables: int, seed: int = 42):
     def sigs(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype="object")
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        qm = np.floor(m * float(SIG_SCALE) + 0.5).astype(np.int64)
-        signs = (qm @ qp.T >= 0).astype(np.int64)  # (batch, tables*bits)
+        signs = (_quantize(vecs) @ qp.T >= 0).astype(np.int64)
         per_table = [
             signs[:, t * bits:(t + 1) * bits] @ weights
             for t in range(tables)
@@ -259,185 +151,143 @@ def int_sigs_udf(dim: int, bits: int, tables: int, seed: int = 42):
     return sigs
 
 
-def lsh_bucket_top_k(
+# ---------------------------------------------------------------------------
+# Exact integer micro-cosine top-k: one trim rule, two kernels
+# ---------------------------------------------------------------------------
+
+
+def _trim_top_k(
+    ids: np.ndarray,
+    scores: np.ndarray,
+    k: int,
+    exclude: int | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The one top-k rule: the ``k`` best (score desc, id asc) entries,
+    after dropping the id ``exclude`` (the query itself when the corpus
+    holds it). Every trim in this module and every final rank window
+    orders by this key, so a trim of any subset of the candidates keeps
+    every member of that subset's share of the global top-k."""
+    if exclude is not None:
+        keep = ids != exclude
+        ids, scores = ids[keep], scores[keep]
+    top = np.lexsort((ids, -scores))[:k]
+    return ids[top], scores[top]
+
+
+def _nonzero(ids: np.ndarray, vecs, scale: int):
+    """(ids, quantized matrix, norms) of ``vecs`` with zero-quantized-norm
+    rows dropped: their cosine is undefined, and the oracles filter
+    them identically."""
+    if len(ids) == 0:
+        return ids, np.zeros((0, 0), dtype=np.int64), np.zeros(0)
+    qm = _quantize(vecs, scale)
+    n2 = (qm * qm).sum(axis=1)
+    ok = n2 > 0
+    return ids[ok], qm[ok], np.sqrt(n2[ok].astype(np.float64))
+
+
+def _micro_top_k(
+    q, c, k: int, exclude_self: bool, query_id: str, corpus_id: str
+) -> pd.DataFrame:
+    """Per query of ``q`` its trimmed top-k among ``c`` (both
+    ``_nonzero`` triples). The score is
+    floor(dot / (‖q‖·‖c‖) · 10⁶ + 0.5) over the int64 dot: for
+    embedding-sized components (|x| ≲ 1, as in ``int_sigs_udf``) the dot
+    is exact (< 2⁵³ under any summation order) and the rest is a fixed
+    chain of correctly-rounded IEEE ops, so numpy, Spark and DuckDB
+    agree bit for bit and the operator carries an exact oracle."""
+    qids, qm, qn = q
+    cids, cm, cn = c
+    parts = []
+    if len(qids) and len(cids):
+        s = (qm @ cm.T) / (qn[:, None] * cn[None, :])
+        micros = np.floor(s * 1e6 + 0.5).astype(np.int64)
+        for qid, row in zip(qids, micros):
+            ids, scores = _trim_top_k(
+                cids, row, k, qid if exclude_self else None
+            )
+            parts.append(pd.DataFrame(
+                {query_id: qid, corpus_id: ids, "cos_micros": scores}
+            ))
+    if not parts:
+        empty = np.zeros(0, dtype=np.int64)
+        return pd.DataFrame(
+            {query_id: empty, corpus_id: empty, "cos_micros": empty}
+        )
+    return pd.concat(parts, ignore_index=True)
+
+
+def _rank(scored: DataFrame, query_id: str, corpus_id: str, k: int) -> DataFrame:
+    """The final rank window: ``_trim_top_k``'s key over every query's
+    trimmed candidates."""
+    return top_k_per_group(
+        scored, [query_id], [F.desc("cos_micros"), F.asc(corpus_id)], k
+    ).drop("rnk")
+
+
+# The batch path holds the whole query batch on the driver as one int64
+# matrix. The largest in-repo caller is the exact self-KNN graph of the
+# 2,000-vector sf0.1 corpus (scripts/lsh_frontier.py); corpus-sized query
+# sets beyond this belong on ``lsh_probe_matmul_top_k``.
+MAX_QUERY_BATCH = 4096
+
+
+class QueryBatchTooLarge(ValueError):
+    """The batch-KNN query side has more than ``MAX_QUERY_BATCH`` rows."""
+
+
+def matmul_batch_top_k(
     queries: DataFrame,
     corpus: DataFrame,
-    dim: int,
-    bits: int = 8,
     k: int = 10,
     query_id: str = "query_id",
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
     exclude_self: bool = False,
-    multiprobe: bool = False,
-    tables: int = 1,
-    sig_mode: str = "fold",
+    scale: int = SIG_SCALE,
 ) -> DataFrame:
-    """Approximate per-query top-k: bucket corpus and queries by hyperplane
-    signature, equi-join buckets (shuffle on the signature — ~2^bits
-    reduction), exact cosine rescore within buckets, rank per query.
+    """EXACT batch KNN as dense linear algebra: the query batch (at most
+    ``MAX_QUERY_BATCH`` rows, else ``QueryBatchTooLarge``) rides into a
+    ``mapInPandas`` as a driver-side int64 matrix, every corpus Arrow
+    batch is scored in ONE (batch × dim) @ (dim × n_queries) integer
+    matmul, and each batch emits only its per-query top-k — so the
+    corpus is touched once with NO join and the only shuffle is the
+    trimmed candidate set into the final rank window.
 
-    Three recall knobs, all deterministic (hence exactly oracle-able):
-    - ``bits``: fewer bits = bigger buckets = more candidates (AND
-      amplification; each extra bit multiplies the per-neighbor collision
-      probability by p = 1 - angle/pi).
-    - ``multiprobe``: additionally probes every 1-bit-flipped signature.
-      The QUERY side explodes into bits+1 probe rows — a bits+1× query-
-      side shuffle, the corpus side unchanged — and within one table each
-      (query, candidate) pair arises at most once (a candidate's single
-      signature equals exactly one probe value), so no dedup is needed.
-    - ``tables``: L independent hyperplane sets, candidates = union of the
-      per-table buckets (OR amplification: P(candidate) = 1-(1-p^bits)^L).
-      This is the knob that actually buys recall on weakly clustered data
-      — measured frontier in SCALE.md — at cost L× the signature join.
-      A pair can collide in several tables, so the multi-table path
-      dedups (query, candidate) BEFORE the window rank; single-table
-      plans are unchanged (no explode, no dedup).
-    - ``sig_mode``: "fold" computes each signature bit as a JVM
-      higher-order fold (no Python anywhere); "int" computes ALL
-      signatures in one Arrow matmul over int64-quantized vectors and
-      planes (``int_sigs_udf``) — a DIFFERENT (quantized) but equally
-      deterministic hash family whose cross-engine exactness is
-      order-free (integer dots < 2^53), and the right choice once
-      tables×bits folds dominate (the bench default for the multi-table
-      config; measured in SCALE.md).
-    """
-    from pyspark.sql import Window as W
-
-    if sig_mode not in ("fold", "int"):
-        raise ValueError(f"unknown sig_mode {sig_mode!r}")
-
-    def sig_for(df_vec: Column, t: int) -> Column:
-        planes = _hyperplanes(dim, bits, table_seed(seed, t))
-        return lsh_signature(df_vec, planes)
-
-    sig_arr = (
-        int_sigs_udf(dim, bits, tables, seed) if sig_mode == "int" else None
+    Scores are ``_micro_top_k``'s integer micro-cosines; the per-batch
+    trim and the final window share ``_trim_top_k``'s key, so the trim
+    is a superset of the global top-k by construction. Zero-norm vectors
+    are excluded on both sides. With ``exclude_self`` a corpus row whose
+    id equals the query id is dropped before ranking (the KNN-graph
+    shape, where the query batch is a slice of the corpus)."""
+    q_rows = (
+        queries.select(query_id, vec_col).limit(MAX_QUERY_BATCH + 1).collect()
     )
-
-    if tables == 1:
-
-        def one_sig(df: DataFrame, idc: str, vname: str, nname: str) -> DataFrame:
-            sig = (
-                sig_arr(F.col(vec_col))[0]
-                if sig_arr is not None
-                else sig_for(F.col(vec_col), 0)
-            )
-            return df.select(
-                F.col(idc),
-                F.col(vec_col).alias(vname),
-                norm(F.col(vec_col)).alias(nname),
-                sig.alias("__sig0"),
-            )
-
-        c = one_sig(corpus, corpus_id, vec_col, "__cn").withColumnRenamed(
-            "__sig0", "__sig"
+    if len(q_rows) > MAX_QUERY_BATCH:
+        raise QueryBatchTooLarge(
+            f"matmul_batch_top_k: the query batch has at least "
+            f"{len(q_rows)} rows; the bound is {MAX_QUERY_BATCH}"
         )
-        qbase = one_sig(queries, query_id, "__qv", "__qn")
-        if multiprobe:
-            probes = F.array(
-                F.col("__sig0"),
-                *[
-                    F.col("__sig0").bitwiseXOR(F.lit(1 << i).cast("long"))
-                    for i in range(bits)
-                ],
-            )
-            q = qbase.select(
-                query_id, "__qv", "__qn", F.explode(probes).alias("__sig")
-            )
-        else:
-            q = qbase.withColumnRenamed("__sig0", "__sig")
-        scored = c.join(q, "__sig").select(
-            query_id,
-            corpus_id,
-            F.round(
-                cosine_presplit(
-                    F.col(vec_col), F.col("__qv"), F.col("__cn"), F.col("__qn")
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-    else:
-        # (table, signature) composite bucket key on both sides; the
-        # explode is L rows per vector (corpus AND query), the equi-join
-        # runs on (__tbl, __sig), and the union of per-table candidate
-        # sets is deduplicated before ranking.
-        def tagged(
-            df: DataFrame, idc: str, keep_vec: str, keep_norm: str, probe: bool
-        ) -> DataFrame:
-            if sig_arr is not None:
-                # one Arrow pass computes every table's signature; the
-                # explode then reads array elements instead of folding
-                base = df.select(
-                    F.col(idc),
-                    F.col(vec_col).alias(keep_vec),
-                    norm(F.col(vec_col)).alias(keep_norm),
-                    sig_arr(F.col(vec_col)).alias("__sigs"),
-                )
-                sig_of = lambda t: F.col("__sigs")[t]  # noqa: E731
-            else:
-                base = df.select(
-                    F.col(idc),
-                    F.col(vec_col).alias(keep_vec),
-                    norm(F.col(vec_col)).alias(keep_norm),
-                    F.col(vec_col).alias("__rawv"),
-                )
-                sig_of = lambda t: sig_for(F.col("__rawv"), t)  # noqa: E731
-            entries = []
-            for t in range(tables):
-                s = sig_of(t)
-                entries.append(F.struct(F.lit(t).alias("t"), s.alias("s")))
-                if probe:
-                    entries.extend(
-                        F.struct(
-                            F.lit(t).alias("t"),
-                            s.bitwiseXOR(F.lit(1 << i).cast("long")).alias("s"),
-                        )
-                        for i in range(bits)
-                    )
-            return base.select(
-                idc,
-                keep_vec,
-                keep_norm,
-                F.explode(F.array(*entries)).alias("__p"),
-            ).select(
-                idc,
-                keep_vec,
-                keep_norm,
-                F.col("__p.t").alias("__tbl"),
-                F.col("__p.s").alias("__sig"),
-            )
-
-        c = tagged(corpus, corpus_id, "__cv", "__cn", False)
-        q = tagged(queries, query_id, "__qv", "__qn", multiprobe)
-        # (Scoring before the distinct is deliberate: deduping (query,
-        # candidate) pairs first would shuffle the vector arrays and costs
-        # more than the duplicate rescore folds it saves — measured at
-        # sf0.1; the dominant cost here is the 64 signature folds per
-        # vector, inherent to tables x bits.)
-        scored = (
-            c.join(q, ["__tbl", "__sig"])
-            .select(
-                query_id,
-                corpus_id,
-                F.round(
-                    cosine_presplit(
-                        F.col("__cv"), F.col("__qv"), F.col("__cn"), F.col("__qn")
-                    ),
-                    6,
-                ).alias("cosine_sim"),
-            )
-            .distinct()
-        )
-    if exclude_self:
-        scored = scored.where(F.col(corpus_id) != F.col(query_id))
-    w = W.partitionBy(query_id).orderBy(F.desc("cosine_sim"), F.asc(corpus_id))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .drop("rnk")
+    q = _nonzero(
+        np.array([int(r[0]) for r in q_rows], dtype=np.int64),
+        [r[1] for r in q_rows],
+        scale,
     )
+    out_schema = f"{query_id} long, {corpus_id} long, cos_micros long"
+
+    def score(batches):
+        for pdf in batches:
+            c = _nonzero(
+                pdf[corpus_id].to_numpy(dtype=np.int64), pdf[vec_col], scale
+            )
+            out = _micro_top_k(q, c, k, exclude_self, query_id, corpus_id)
+            if len(out):
+                yield out
+
+    scored = corpus.select(
+        F.col(corpus_id), F.col(vec_col)
+    ).mapInPandas(score, out_schema)
+    return _rank(scored, query_id, corpus_id, k)
 
 
 def lsh_probe_matmul_top_k(
@@ -456,37 +306,34 @@ def lsh_probe_matmul_top_k(
     tables: int = 1,
     self_corpus: bool = False,
 ) -> DataFrame:
-    """LSH top-k with a per-BUCKET integer matmul rescore — the scale
-    shape of ``lsh_bucket_top_k(sig_mode='int')`` once the candidate set
-    (Hamming-1 probe ball, or the multi-table union) dominates cost.
-    ``multiprobe=True, tables=1`` is the probe config; ``multiprobe=False,
-    tables=L`` the OR-amplified multi-table config.
+    """Approximate per-query top-k: bucket corpus and queries by
+    quantized hyperplane signature (``int_sigs_udf``), then rescore each
+    bucket EXACTLY with one (nq_b × dim) @ (dim × nc_b) int64 matmul —
+    Arrow moves each vector ONCE per bucket membership, never once per
+    candidate pair. Scores are ``_micro_top_k``'s integer micro-cosines,
+    the ``matmul_batch_top_k`` scores: approximation only prunes
+    candidates, it never distorts a score.
 
-    The fold-rescore variant pays one interpreted 64-element fold per
-    candidate PAIR (≈ (bits+1)·|Q|·|C|/2^bits pairs); here each signature
-    bucket is cogrouped (query probes × corpus rows) and scored in ONE
-    (nq_b × dim) @ (dim × nc_b) int64 matmul per bucket — Arrow moves each
-    vector ONCE per bucket membership (corpus 1×, queries bits+1×), never
-    once per pair. Scores are integer micro-cosines over
-    floor(x·10⁶ + 0.5)-quantized vectors (the ``matmul_batch_top_k``
-    recipe): the dot is an exact int64 < 2⁵³ under any summation order,
-    so the score is cross-engine exact AND the per-bucket top-k trim key
-    (cos_micros desc, id asc) is the final rank key with integer ties —
-    the trim is a superset of the global top-k by construction, no
-    rounding margin needed. Within one table a (query, candidate) pair
-    arises at most once (a candidate's single signature equals exactly
-    one probe value), so no dedup stage exists. Zero-quantized-norm
-    vectors are excluded on both sides (cosine undefined; the oracle
-    filters identically).
-
-    With ``tables`` > 1 (the OR-amplified multi-table config) both sides
-    explode over (table, signature) composite buckets and a pair can
-    collide in several tables — always with the SAME integer score, so a
-    ``distinct`` over the trimmed (query, candidate, score) rows restores
-    set semantics. The per-bucket trim stays a superset of the global
-    top-k: within any one bucket each candidate appears once, the
-    candidates beating a global-top-k member there are a subset of its
-    global beaters, so it survives every bucket's trim.
+    Three recall knobs, all deterministic (hence exactly oracle-able):
+    - ``bits``: fewer bits = bigger buckets = more candidates (AND
+      amplification; each extra bit multiplies the per-neighbor collision
+      probability by p = 1 - angle/pi).
+    - ``multiprobe``: additionally probes every 1-bit-flipped signature.
+      The QUERY side explodes into bits+1 probe rows, the corpus side is
+      unchanged, and within one table each (query, candidate) pair arises
+      at most once (a candidate's single signature equals exactly one
+      probe value), so no dedup stage exists. ``multiprobe=True,
+      tables=1`` is the probe config.
+    - ``tables``: L independent hyperplane sets, candidates = union of the
+      per-table buckets (OR amplification: P(candidate) = 1-(1-p^bits)^L;
+      measured frontier in SCALE.md). Both sides explode over (table,
+      signature) composite buckets and a pair can collide in several
+      tables — always with the SAME integer score, so a ``distinct`` over
+      the trimmed (query, candidate, score) rows restores set semantics.
+      The per-bucket trim stays a superset of the global top-k: within
+      any one bucket each candidate appears once, the candidates beating
+      a global-top-k member there are a subset of its global beaters, so
+      it survives every bucket's trim.
 
     ``self_corpus=True`` is the KNN-GRAPH fast path (queries == corpus,
     the sim_knn_graph_lsh* shape): instead of scanning, signing, and
@@ -508,12 +355,6 @@ def lsh_probe_matmul_top_k(
     final window. At 100 TB the bucket count (tables·2^bits) bounds
     parallelism — production raises bits with the corpus, keeping buckets
     cache-sized."""
-    from pyspark.sql import Window as W
-
-    def _quant(pdf_vecs: pd.Series) -> np.ndarray:
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf_vecs])
-        return np.floor(m * float(scale) + 0.5).astype(np.int64)
-
     sig_arr = int_sigs_udf(dim, bits, tables, seed)
     out_schema = f"{query_id} long, {corpus_id} long, cos_micros long"
 
@@ -521,43 +362,10 @@ def lsh_probe_matmul_top_k(
         q_vecs: pd.Series, q_ids: np.ndarray,
         c_vecs: pd.Series, c_ids: np.ndarray,
     ) -> pd.DataFrame:
-        if len(q_ids) == 0 or len(c_ids) == 0:
-            return pd.DataFrame(
-                {query_id: [], corpus_id: [], "cos_micros": []}
-            )
-        qm = _quant(q_vecs)
-        cm = _quant(c_vecs)
-        qn2 = (qm * qm).sum(axis=1)
-        cn2 = (cm * cm).sum(axis=1)
-        qok, cok = qn2 > 0, cn2 > 0
-        qm, qids, qn2 = qm[qok], q_ids[qok], qn2[qok]
-        cm, cids, cn2 = cm[cok], c_ids[cok], cn2[cok]
-        if len(qids) == 0 or len(cids) == 0:
-            return pd.DataFrame(
-                {query_id: [], corpus_id: [], "cos_micros": []}
-            )
-        s = (qm @ cm.T) / (
-            np.sqrt(qn2.astype(np.float64))[:, None]
-            * np.sqrt(cn2.astype(np.float64))[None, :]
+        return _micro_top_k(
+            _nonzero(q_ids, q_vecs, scale), _nonzero(c_ids, c_vecs, scale),
+            k, exclude_self, query_id, corpus_id,
         )
-        micros = np.floor(s * 1e6 + 0.5).astype(np.int64)
-        parts = []
-        for i in range(len(qids)):
-            row, ids = micros[i], cids
-            if exclude_self:
-                m_ok = ids != qids[i]
-                row, ids = row[m_ok], ids[m_ok]
-            top = np.lexsort((ids, -row))[:k]
-            parts.append(
-                pd.DataFrame(
-                    {
-                        query_id: qids[i],
-                        corpus_id: ids[top],
-                        "cos_micros": row[top],
-                    }
-                )
-            )
-        return pd.concat(parts, ignore_index=True)
 
     def entries_for(t: int, probe: bool, with_role: bool) -> list:
         s = F.col("__sigs")[t]
@@ -652,14 +460,7 @@ def lsh_probe_matmul_top_k(
         # subset of its grouping keys) and the final window share this one
         # exchange instead of shuffling the pair set twice.
         scored = scored.repartition(F.col(query_id)).distinct()
-    w = W.partitionBy(query_id).orderBy(
-        F.desc("cos_micros"), F.asc(corpus_id)
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .drop("rnk")
-    )
+    return _rank(scored, query_id, corpus_id, k)
 
 
 def quantize_int8(vec: Column, eps: float = 1e-12):
@@ -680,99 +481,3 @@ def quantize_int8(vec: Column, eps: float = 1e-12):
         vec, lambda x: F.round(x.cast("double") * 127 / scale).cast("int")
     )
     return codes, scale
-
-
-def matmul_batch_top_k(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = False,
-    scale: int = SIG_SCALE,
-) -> DataFrame:
-    """EXACT batch KNN as dense linear algebra: the query batch rides into
-    a ``mapInPandas`` as a driver-side int64 matrix (batch KNN contract:
-    n_queries is bounded), every corpus Arrow batch is scored in ONE
-    (batch × dim) @ (dim × n_queries) integer matmul, and each partition
-    emits only its per-query top-k — so the corpus is touched once with
-    NO join and the only shuffle is k · n_queries · n_partitions rows
-    into the final rank window (vs ``pairwise_top_k``'s materialized
-    broadcast-join pair set).
-
-    Scores are integer micro-cosines over floor(x·10⁶ + 0.5)-quantized
-    vectors: the dot is an exact int64 (< 2⁵³, any summation order), and
-    ``floor(dot / (‖a‖·‖b‖) · 10⁶ + 0.5)`` is a fixed chain of correctly-
-    rounded IEEE ops on identical inputs — deterministic across numpy,
-    Spark, and DuckDB (the bm25_micros recipe), so the whole operator
-    carries an exact oracle. The per-partition trim orders by the SAME
-    (cos_micros desc, id asc) key as the final window, which makes the
-    trim a superset of the global top-k by construction. Zero-norm
-    vectors are excluded (cosine undefined)."""
-    q_rows = queries.select(query_id, vec_col).collect()
-    qm = np.array(
-        [
-            np.floor(np.asarray(r[1], dtype=np.float64) * scale + 0.5)
-            for r in q_rows
-        ],
-        dtype=np.int64,
-    )
-    qids = np.array([int(r[0]) for r in q_rows], dtype=np.int64)
-    qn2 = (qm * qm).sum(axis=1)
-    keep = qn2 > 0
-    qm, qids, qn2 = qm[keep], qids[keep], qn2[keep]
-    qnorm = np.sqrt(qn2.astype(np.float64))
-    nq = len(qids)
-    out_schema = f"{query_id} long, {corpus_id} long, cos_micros long"
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0 or nq == 0:
-                continue
-            cids = pdf[corpus_id].to_numpy(dtype=np.int64)
-            m = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            cm = np.floor(m * scale + 0.5).astype(np.int64)
-            cn2 = (cm * cm).sum(axis=1)
-            ok = cn2 > 0
-            cids, cm, cn2 = cids[ok], cm[ok], cn2[ok]
-            if len(cids) == 0:
-                continue
-            cnorm = np.sqrt(cn2.astype(np.float64))
-            s = (cm @ qm.T) / (cnorm[:, None] * qnorm[None, :])
-            micros = np.floor(s * 1e6 + 0.5).astype(np.int64)
-            parts = []
-            for j in range(nq):
-                col = micros[:, j]
-                ids = cids
-                if exclude_self:
-                    m_ok = ids != qids[j]
-                    col, ids = col[m_ok], ids[m_ok]
-                top = np.lexsort((ids, -col))[:k]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            query_id: qids[j],
-                            corpus_id: ids[top],
-                            "cos_micros": col[top],
-                        }
-                    )
-                )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-
-    from pyspark.sql import Window as W
-
-    scored = corpus.select(
-        F.col(corpus_id), F.col(vec_col)
-    ).mapInPandas(score, out_schema)
-    w = W.partitionBy(query_id).orderBy(
-        F.desc("cos_micros"), F.asc(corpus_id)
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .drop("rnk")
-    )

@@ -51,7 +51,7 @@ from telemetry_parquet_spark.queries import table_service  # noqa: F401, E402
 # The two slipped r08 rows (f_date_functions, f_string_functions —
 # pure scalar functions over plain parquet, no snapshot/scan-planner
 # dependence) plus the r09 cohort lead the r14 window. Freshness
-# arithmetic: 230 registered queries / 50 slots = a ~4.6-round
+# arithmetic: 229 registered queries / 50 slots = a ~4.6-round
 # steady-state rotation; each round re-certifies the stalest cohort
 # plus all never-checked names.
 _DRIVER_PRIORITY: tuple[str, ...] = (

@@ -186,48 +186,6 @@ def sim_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "sim_knn_graph",
-    oracle="""
-    WITH q AS (
-      SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id % 25 = 0
-    ), pairs AS (
-      SELECT q.query_id, e.vec_id,
-             UNNEST(CAST(e.embedding AS DOUBLE[])) AS a,
-             UNNEST(q.qv) AS b
-      FROM embeddings e, q
-      WHERE e.vec_id <> q.query_id
-    ), scored AS (
-      SELECT query_id, vec_id,
-             round(SUM(a*b) / (sqrt(SUM(a*a)) * sqrt(SUM(b*b))), 6)
-               AS cosine_sim
-      FROM pairs GROUP BY query_id, vec_id
-    )
-    SELECT query_id, vec_id, cosine_sim
-    FROM scored
-    QUALIFY row_number() OVER (
-      PARTITION BY query_id ORDER BY cosine_sim DESC, vec_id ASC) <= 5
-    """,
-)
-def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch KNN join (the KNN-graph shape): every 25th vector is a query
-    row; each gets its 5 nearest corpus neighbors by cosine, self excluded.
-    The query batch is broadcast against the corpus (|batch| × |corpus|
-    scored pairs — LINEAR in the corpus for a bounded batch, never
-    corpus²); per-query ranking is a hash-partitioned window. For
-    corpus-sized query sets the scale path is the LSH/IVF-bucketed join
-    (``lsh_bucket_top_k`` / ``datapipe/ann_index.py``), which replaces the
-    broadcast with an equi-join on bucket signatures."""
-    from telemetry_parquet_spark.datapipe.similarity import pairwise_top_k
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return pairwise_top_k(queries, emb, k=5, exclude_self=True)
-
-
 def _knn_lsh_oracle(
     dim: int = 64,
     bits: int = 4,
@@ -235,27 +193,25 @@ def _knn_lsh_oracle(
     k: int = 3,
     max_hamming: int = 0,
     tables: int = 1,
-    sig_mode: str = "fold",
-    rescore: str = "float",
 ) -> str:
-    """DuckDB replay of the LSH-bucketed KNN graph: the hyperplanes are
-    deterministic driver constants (same ``_hyperplanes`` call as the Spark
-    side), so the signature, the bucket self-join, the cosine rescore, and
-    the per-query ranking all replay exactly — the whole APPROXIMATE ANN
-    config sits under an exact cross-engine gate (the
+    """DuckDB replay of ``lsh_probe_matmul_top_k``'s KNN graph: the
+    hyperplanes are deterministic driver constants (same ``_hyperplanes``
+    call as the Spark side), so the signature, the bucket self-join, the
+    rescore, and the per-query ranking all replay exactly — the whole
+    APPROXIMATE ANN config sits under an exact cross-engine gate (the
     ``dd_embedding_near_dup_lsh`` precedent, extended to ranked output).
     ``tables`` > 1 states the OR-amplified candidate set directly: a pair
     is a candidate if ANY table's signatures match — proving the Spark
-    side's explode + equi-join + distinct implements exactly that union.
+    side's explode + cogroup + distinct implements exactly that union.
 
-    ``sig_mode='int'`` replays the QUANTIZED hash family
-    (``int_sigs_udf``): both vector and planes go through
-    floor(x·10⁶ + 0.5) and the sign is taken on the resulting INTEGER
-    dot, which is < 2⁵³ and therefore exact under any summation order in
-    either engine — the only cross-engine float contract left is the
-    quantization itself (one multiply+add+floor per element, IEEE-fixed).
-    The rescore cosine stays the raw-vector float computation in both
-    modes."""
+    Both vector and planes go through floor(x·10⁶ + 0.5) (``int_sigs_udf``)
+    and the sign is taken on the resulting INTEGER dot, which is < 2⁵³
+    and therefore exact under any summation order in either engine — the
+    only cross-engine float contract left is the quantization itself (one
+    multiply+add+floor per element, IEEE-fixed). The rescore is the
+    integer micro-cosine over the SAME quantized lists: /, *, sqrt and
+    floor are single correctly-rounded IEEE ops in the same order on both
+    engines."""
     from telemetry_parquet_spark.datapipe.similarity import (
         _hyperplanes,
         quantize_plane,
@@ -264,41 +220,20 @@ def _knn_lsh_oracle(
 
     def sig_terms(t: int) -> str:
         planes = _hyperplanes(dim, bits, table_seed(seed, t))
-        if sig_mode == "int":
-            return " + ".join(
-                "(CASE WHEN list_inner_product(qv, ["
-                + ",".join(f"{float(c)!r}" for c in quantize_plane(p))
-                + f"]) >= 0 THEN {1 << i} ELSE 0 END)"
-                for i, p in enumerate(planes)
-            )
         return " + ".join(
-            "(CASE WHEN list_inner_product(v, ["
-            + ",".join(repr(float(x)) for x in p)
+            "(CASE WHEN list_inner_product(qv, ["
+            + ",".join(f"{float(c)!r}" for c in quantize_plane(p))
             + f"]) >= 0 THEN {1 << i} ELSE 0 END)"
             for i, p in enumerate(planes)
         )
 
     sig_cols = ", ".join(f"{sig_terms(t)} AS s{t}" for t in range(tables))
-    if rescore == "micros":
-        # integer micro-cosine over the SAME quantized lists the
-        # signatures use (lsh_probe_matmul_top_k): the int dot is exact
-        # as a double (< 2⁵³), and /, *, sqrt, floor are single
-        # correctly-rounded IEEE ops in the same order on both engines
-        cos_expr = (
-            "CAST(floor(list_inner_product(q.qv, c.qv) / "
-            "(sqrt(list_inner_product(q.qv, q.qv)) * "
-            "sqrt(list_inner_product(c.qv, c.qv))) * 1000000 + 0.5) "
-            "AS BIGINT)"
-        )
-        cos_alias = "cos_micros"
-    else:
-        cos_expr = (
-            "round(list_inner_product(q.v, c.v) / "
-            "(sqrt(list_inner_product(q.v, q.v)) * "
-            "sqrt(list_inner_product(c.v, c.v))), 6)"
-        )
-        cos_alias = "cosine_sim"
-    cos = cos_expr
+    cos = (
+        "CAST(floor(list_inner_product(q.qv, c.qv) / "
+        "(sqrt(list_inner_product(q.qv, q.qv)) * "
+        "sqrt(list_inner_product(c.qv, c.qv))) * 1000000 + 0.5) "
+        "AS BIGINT)"
+    )
 
     def match_t(t: int) -> str:
         return (
@@ -308,23 +243,16 @@ def _knn_lsh_oracle(
         )
 
     match = " OR ".join(match_t(t) for t in range(tables))
-    qv_col = (
-        ", list_transform(CAST(embedding AS DOUBLE[]),"
-        " x -> floor(x * 1000000 + 0.5)) AS qv"
-        if sig_mode == "int"
-        else ""
-    )
-    keep_qv = ", qv" if sig_mode == "int" else ""
-    zero_guard = (
-        " WHERE list_inner_product(qv, qv) > 0" if rescore == "micros" else ""
-    )
     return f"""
     WITH vecs AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v{qv_col} FROM embeddings
+      SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]),
+                                    x -> floor(x * 1000000 + 0.5)) AS qv
+      FROM embeddings
     ), sig AS (
-      SELECT vec_id, v{keep_qv}, {sig_cols} FROM vecs{zero_guard}
+      SELECT vec_id, qv, {sig_cols} FROM vecs
+      WHERE list_inner_product(qv, qv) > 0
     )
-    SELECT q.vec_id AS query_id, c.vec_id, {cos} AS {cos_alias}
+    SELECT q.vec_id AS query_id, c.vec_id, {cos} AS cos_micros
     FROM sig q JOIN sig c ON ({match}) AND q.vec_id <> c.vec_id
     QUALIFY row_number() OVER (
       PARTITION BY q.vec_id ORDER BY {cos} DESC, c.vec_id ASC) <= {k}
@@ -333,21 +261,19 @@ def _knn_lsh_oracle(
 
 @query(
     "sim_knn_graph_lsh",
-    oracle=_knn_lsh_oracle(sig_mode="int", rescore="micros"),
+    oracle=_knn_lsh_oracle(),
 )
 def sim_knn_graph_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-corpus KNN graph, the scale path: EVERY vector is a query, and
     candidates come from bucketing on the 4-bit hyperplane signature —
-    Σ|bucket|² comparisons instead of corpus² (the broadcast batch shape of
-    ``sim_knn_graph`` stops scaling once the batch is corpus-sized). The
-    blocking is deterministic, so unlike most ANN configs this one carries
-    an EXACT oracle; recall vs the exact graph trades with ``bits`` and is
-    bounded in tests. Production: bits 8-16 + multi-probe bit flips.
-    Round 10 unified the whole LSH query family on the per-bucket int64
+    Σ|bucket|² comparisons instead of corpus² (the bounded-batch shape of
+    ``sim_matmul_batch_topk`` stops scaling once the batch is
+    corpus-sized). The blocking is deterministic, so unlike most ANN
+    configs this one carries an EXACT oracle; recall vs the exact graph
+    trades with ``bits`` and is bounded in tests. Production: bits 8-16 +
+    multi-probe bit flips. Every LSH query runs on the per-bucket int64
     matmul backend (``lsh_probe_matmul_top_k``; exact integer
-    micro-cosines) — the interpreted fold/float backend
-    (``lsh_bucket_top_k``) remains pytest-covered as the no-Python
-    alternative."""
+    micro-cosines)."""
     from telemetry_parquet_spark.datapipe.similarity import (
         lsh_probe_matmul_top_k,
     )
@@ -362,9 +288,7 @@ def sim_knn_graph_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_knn_graph_lsh_probe",
-    oracle=_knn_lsh_oracle(
-        bits=6, max_hamming=1, sig_mode="int", rescore="micros"
-    ),
+    oracle=_knn_lsh_oracle(bits=6, max_hamming=1),
 )
 def sim_knn_graph_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe variant of ``sim_knn_graph_lsh``: finer buckets (6 bits
@@ -393,7 +317,7 @@ def sim_knn_graph_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_knn_graph_lsh_tables",
-    oracle=_knn_lsh_oracle(bits=8, tables=8, sig_mode="int", rescore="micros"),
+    oracle=_knn_lsh_oracle(bits=8, tables=8),
 )
 def sim_knn_graph_lsh_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-TABLE variant of ``sim_knn_graph_lsh`` — the round-8 default

@@ -18,9 +18,8 @@ from telemetry_parquet_spark.datapipe.dedup import (
     simhash_near_dup_pairs,
 )
 from telemetry_parquet_spark.datapipe.similarity import (
-    brute_force_top_k,
-    lsh_bucket_top_k,
-    pairwise_top_k,
+    lsh_probe_matmul_top_k,
+    matmul_batch_top_k,
 )
 from telemetry_parquet_spark.datapipe.text import language_id, quality_features
 
@@ -206,22 +205,25 @@ def test_brute_force_vs_lsh_similarity(spark):
     for i in range(6, 56):
         rows.append((i, unit([rng.gauss(0, 1) for _ in range(dim)])))
     corpus = spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-    top = brute_force_top_k(corpus, base, k=6)
-    got_ids = [r.vec_id for r in top.collect()]
-    assert set(got_ids) == {0, 1, 2, 3, 4, 5}
-    assert got_ids[0] == 0  # the vector itself
-
     queries = spark.createDataFrame([(100, base)], ["query_id", "embedding"])
-    pw = pairwise_top_k(queries, corpus, k=6)
-    assert {r.vec_id for r in pw.collect()} == {0, 1, 2, 3, 4, 5}
 
-    # LSH path: planted neighbors share the bucket of the query (identical
-    # direction -> identical signature); recall on the planted set is 1
-    lsh = lsh_bucket_top_k(queries, corpus, dim=dim, bits=6, k=6)
-    lsh_ids = {r.vec_id for r in lsh.collect()}
-    assert {0, 1, 2, 3, 4, 5} <= lsh_ids | {0, 1, 2, 3, 4, 5}
-    assert 0 in lsh_ids
+    exact = sorted(
+        (-r.cos_micros, r.vec_id)
+        for r in matmul_batch_top_k(queries, corpus, k=6).collect()
+    )
+    assert {v for _, v in exact} == {0, 1, 2, 3, 4, 5}
+    assert exact[0][1] == 0  # the vector itself ranks first
+
+    # LSH path: the query's identical twin (vec 0) shares its bucket, and
+    # every reported neighbor carries the exact kernel's score
+    exact_score = {v: -s for s, v in exact}
+    lsh = lsh_probe_matmul_top_k(
+        queries, corpus, dim=dim, bits=6, k=6, multiprobe=False
+    ).collect()
+    assert 0 in {r.vec_id for r in lsh}
+    for r in lsh:
+        if r.vec_id in exact_score:
+            assert r.cos_micros == exact_score[r.vec_id]
 
 
 def test_embedding_near_dup(spark):

@@ -9,10 +9,17 @@ from __future__ import annotations
 import itertools
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from telemetry_parquet_spark.datapipe.retrieval import bm25_top_k
-from telemetry_parquet_spark.datapipe.similarity import pairwise_top_k
+from telemetry_parquet_spark.datapipe.similarity import (
+    MAX_QUERY_BATCH,
+    QueryBatchTooLarge,
+    int_sigs_udf,
+    lsh_probe_matmul_top_k,
+    matmul_batch_top_k,
+)
 from telemetry_parquet_spark.operators.graph_metrics import (
     canonical_edges,
     triangle_counts,
@@ -105,13 +112,17 @@ def test_bm25_micros_is_the_exact_sort_key(spark):
         assert r["bm25"] == round(r["bm25_micros"] / 1e6, 6)
 
 
-def test_pairwise_top_k_exclude_self(spark):
+def _edges(df) -> set:
+    return {(r["query_id"], r["vec_id"]) for r in df.collect()}
+
+
+def test_matmul_batch_top_k_exclude_self(spark):
     vecs = [(i, [float(i == j) for j in range(4)]) for i in range(4)]
     corpus = spark.createDataFrame(vecs, ["vec_id", "embedding"])
     queries = corpus.select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = pairwise_top_k(queries, corpus, k=2, exclude_self=True).collect()
+    out = matmul_batch_top_k(queries, corpus, k=2, exclude_self=True).collect()
     assert all(r["query_id"] != r["vec_id"] for r in out)
     per_q: dict[int, int] = {}
     for r in out:
@@ -119,14 +130,26 @@ def test_pairwise_top_k_exclude_self(spark):
     assert all(v == 2 for v in per_q.values()) and len(per_q) == 4
 
 
+def test_matmul_batch_top_k_bounds_the_query_batch(spark):
+    """The query batch is collected to the driver, so one row past
+    MAX_QUERY_BATCH raises the named error (stating the count and the
+    bound) instead of growing the driver matrix without limit."""
+    rows = [(i, [1.0, (i % 100) / 100.0]) for i in range(MAX_QUERY_BATCH + 1)]
+    corpus = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    queries = corpus.select(F.col("vec_id").alias("query_id"), "embedding")
+    with pytest.raises(QueryBatchTooLarge, match=str(MAX_QUERY_BATCH)):
+        matmul_batch_top_k(queries, corpus, k=1)
+    # exactly at the bound the batch is accepted
+    ok = matmul_batch_top_k(queries.limit(MAX_QUERY_BATCH), corpus, k=1)
+    assert ok.count() == MAX_QUERY_BATCH
+
+
 def test_lsh_knn_graph_finds_planted_twins(spark):
     """Cosine-LSH KNN graph: planted near-identical twins (cosine ≈ 0.999)
     agree on all 4 signature bits with probability (1 - θ/π)^4 ≈ 0.98, so
-    twin recall must be high — while the bucket join compares only
+    twin recall must be high — while the bucket rescore compares only
     Σ|bucket|² pairs, never corpus². Seeded and deterministic."""
     import random as _random
-
-    from telemetry_parquet_spark.datapipe.similarity import lsh_bucket_top_k
 
     rng = _random.Random(123)
     rows = []
@@ -139,8 +162,8 @@ def test_lsh_knn_graph_finds_planted_twins(spark):
     q = corpus.select(
         F.col("vec_id").alias("query_id"), "embedding"
     ).where(F.col("query_id") < 1000)
-    out = lsh_bucket_top_k(
-        q, corpus, dim=16, bits=4, k=1, exclude_self=True
+    out = lsh_probe_matmul_top_k(
+        q, corpus, dim=16, bits=4, k=1, exclude_self=True, multiprobe=False
     ).collect()
     found = sum(1 for r in out if r["vec_id"] == r["query_id"] + 1000)
     assert found >= 48  # ≥80% of 60 twins ranked as their base's top-1
@@ -148,52 +171,37 @@ def test_lsh_knn_graph_finds_planted_twins(spark):
 
 def test_lsh_knn_graph_subset_of_bucketmates_with_true_scores(spark):
     """Every reported neighbor must share the query's signature bucket and
-    carry its EXACT cosine (the rescore stage is exact — approximation only
-    prunes candidates, never distorts scores)."""
+    carry its EXACT score (the rescore stage is exact — approximation only
+    prunes candidates, never distorts scores). The truth is the exact
+    batch kernel's score for the same pair."""
     import random as _random
-
-    from telemetry_parquet_spark.datapipe.similarity import (
-        _hyperplanes,
-        cosine,
-        lsh_bucket_top_k,
-        lsh_signature,
-    )
 
     rng = _random.Random(5)
     rows = [
         (i, [rng.gauss(0.0, 1.0) for _ in range(8)]) for i in range(80)
     ]
     corpus = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    planes = _hyperplanes(8, 4, 42)
     sigs = {
-        r["vec_id"]: r["s"]
+        r["vec_id"]: r["s"][0]
         for r in corpus.select(
-            "vec_id", lsh_signature(F.col("embedding"), planes).alias("s")
+            "vec_id", int_sigs_udf(8, 4, 1, 42)("embedding").alias("s")
         ).collect()
     }
     q = corpus.select(F.col("vec_id").alias("query_id"), "embedding")
-    out = lsh_bucket_top_k(
-        q, corpus, dim=8, bits=4, k=3, seed=42, exclude_self=True
-    )
-    joined = (
-        out.join(
-            corpus.select(F.col("vec_id").alias("query_id"),
-                          F.col("embedding").alias("__qv")),
-            "query_id",
-        )
-        .join(corpus, "vec_id")
-        .select(
-            "query_id",
-            "vec_id",
-            "cosine_sim",
-            F.round(cosine(F.col("embedding"), F.col("__qv")), 6).alias("true_sim"),
-        )
-        .collect()
-    )
-    assert joined
-    for r in joined:
+    truth = {
+        (r["query_id"], r["vec_id"]): r["cos_micros"]
+        for r in matmul_batch_top_k(
+            q, corpus, k=len(rows), exclude_self=True
+        ).collect()
+    }
+    out = lsh_probe_matmul_top_k(
+        q, corpus, dim=8, bits=4, k=3, seed=42, exclude_self=True,
+        multiprobe=False,
+    ).collect()
+    assert out
+    for r in out:
         assert sigs[r["query_id"]] == sigs[r["vec_id"]]
-        assert r["cosine_sim"] == r["true_sim"]
+        assert r["cos_micros"] == truth[(r["query_id"], r["vec_id"])]
 
 
 def _lpa_reference(edges, iters):
@@ -261,27 +269,16 @@ def test_multiprobe_improves_recall_at_same_bits(spark, sf_dir):
     many exact top-k neighbors as single-probe — and on this corpus,
     strictly more (the whole point of multi-probe)."""
     from telemetry_parquet_spark.sources.tables import load_table
-    from telemetry_parquet_spark.datapipe.similarity import lsh_bucket_top_k
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.select(F.col("vec_id").alias("query_id"), "embedding")
-    exact = set(
-        (r["query_id"], r["vec_id"])
-        for r in pairwise_top_k(q, emb, k=3, exclude_self=True)
-        .select("query_id", "vec_id")
-        .collect()
-    )
+    exact = _edges(matmul_batch_top_k(q, emb, k=3, exclude_self=True))
 
     def recall(multiprobe):
-        got = set(
-            (r["query_id"], r["vec_id"])
-            for r in lsh_bucket_top_k(
-                q, emb, dim=64, bits=6, k=3,
-                exclude_self=True, multiprobe=multiprobe,
-            )
-            .select("query_id", "vec_id")
-            .collect()
-        )
+        got = _edges(lsh_probe_matmul_top_k(
+            q, emb, dim=64, bits=6, k=3,
+            exclude_self=True, multiprobe=multiprobe,
+        ))
         return len(got & exact) / len(exact)
 
     single, multi = recall(False), recall(True)
@@ -299,8 +296,6 @@ def test_multi_table_lsh_recall_and_dedup(spark):
     p^8 ≈ 0.43, eight tables 1-(1-p^8)^8 ≈ 0.99)."""
     import random as _random
 
-    from telemetry_parquet_spark.datapipe.similarity import lsh_bucket_top_k
-
     rng = _random.Random(77)
     rows = []
     for i in range(80):
@@ -314,9 +309,9 @@ def test_multi_table_lsh_recall_and_dedup(spark):
     ).where(F.col("query_id") < 1000)
 
     def run(tables):
-        out = lsh_bucket_top_k(
+        out = lsh_probe_matmul_top_k(
             q, corpus, dim=16, bits=8, k=1, exclude_self=True,
-            tables=tables,
+            multiprobe=False, tables=tables,
         ).collect()
         edges = [(r["query_id"], r["vec_id"]) for r in out]
         assert len(edges) == len(set(edges))  # no duplicate edges
@@ -335,15 +330,10 @@ def test_or_amplification_recall_on_clustered_corpus(spark):
     defensible). Planted geometry: 50 clusters x 12 members, within-
     cluster cosine ≈ 1/(1+σ²d) ≈ 0.93 → collision p = 1 - θ/π ≈ 0.88 per
     hyperplane, so OR-amplified candidate probability is
-    1-(1-p^8)^8 ≈ 0.96; measured top-5 recall vs the exact pairwise
+    1-(1-p^8)^8 ≈ 0.96; measured top-5 recall vs the exact batch-KNN
     ground truth must clear 0.9. Seeded and deterministic."""
     import math as _math
     import random as _random
-
-    from telemetry_parquet_spark.datapipe.similarity import (
-        lsh_bucket_top_k,
-        pairwise_top_k,
-    )
 
     rng = _random.Random(7)
     dim, rows, vid = 32, [], 0
@@ -356,19 +346,11 @@ def test_or_amplification_recall_on_clustered_corpus(spark):
             vid += 1
     corpus = spark.createDataFrame(rows, ["vec_id", "embedding"])
     queries = corpus.select(F.col("vec_id").alias("query_id"), "embedding")
-    truth = {
-        (r["query_id"], r["vec_id"])
-        for r in pairwise_top_k(
-            queries, corpus, k=5, exclude_self=True
-        ).collect()
-    }
-    approx = {
-        (r["query_id"], r["vec_id"])
-        for r in lsh_bucket_top_k(
-            queries, corpus, dim=dim, bits=8, k=5, tables=8,
-            exclude_self=True,
-        ).collect()
-    }
+    truth = _edges(matmul_batch_top_k(queries, corpus, k=5, exclude_self=True))
+    approx = _edges(lsh_probe_matmul_top_k(
+        queries, corpus, dim=dim, bits=8, k=5, tables=8,
+        exclude_self=True, multiprobe=False,
+    ))
     recall = len(truth & approx) / len(truth)
     assert recall >= 0.9, f"clustered-corpus recall {recall:.3f} < 0.9"
 
@@ -418,8 +400,6 @@ def test_matmul_batch_topk_partition_invariant(spark):
     contribution to the global top-k) — and zero-norm vectors are
     excluded, queries included."""
     import random as _random
-
-    from telemetry_parquet_spark.datapipe.similarity import matmul_batch_top_k
 
     rng = _random.Random(3)
     rows = [(i, [rng.uniform(-0.8, 0.8) for _ in range(12)]) for i in range(150)]

@@ -112,11 +112,11 @@ def test_bm25_broadcasts_query_terms_and_stats(spark, sf_dir):
 
 
 def test_knn_graph_is_batch_matmul_not_join(spark, sf_dir):
-    """sim_knn_graph: the query batch rides into an Arrow ``mapInPandas``
-    matmul (the r13 shape — one corpus pass, per-batch top-k trim), so
-    the plan has NO join at all and no shuffle may appear before the
+    """sim_matmul_batch_topk: the query batch rides into an Arrow
+    ``mapInPandas`` int64 matmul (one corpus pass, per-batch top-k trim),
+    so the plan has NO join at all and no shuffle may appear before the
     per-query ranking window."""
-    df = QUERIES["sim_knn_graph"](spark, sf_dir)
+    df = QUERIES["sim_matmul_batch_topk"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "MapInPandas" in plan
     assert "Join" not in plan  # neither broadcast-nested-loop nor shuffle
