@@ -9,7 +9,8 @@ embedding dedup / semantic operators.
 Exact top-k kernels: both score integer micro-cosines over
 floor(x·10⁶ + 0.5)-quantized vectors and trim through ONE rule,
 (score desc, id asc) (``_trim_top_k``), in the per-batch trim and in the
-final rank window alike.
+final rank window alike. A batch whose quantized components are too
+large for exact int64 dots raises ``QuantizedRangeError``.
 
 - ``matmul_batch_top_k``: batch KNN. The bounded query batch rides into
   a ``mapInPandas`` as a driver-side int64 matrix; one matmul per corpus
@@ -107,11 +108,31 @@ def quantize_plane(plane: list[float], scale: int = SIG_SCALE) -> list[int]:
     return [int(math.floor(x * scale + 0.5)) for x in plane]
 
 
+# Integer dots stay exact, in int64 and as int-valued doubles, below 2⁵³.
+EXACT_DOT_BOUND = 1 << 53
+
+
+class QuantizedRangeError(ValueError):
+    """A quantized vector batch has dim · max|q|² >= ``EXACT_DOT_BOUND``."""
+
+
 def _quantize(vecs, scale: int = SIG_SCALE) -> np.ndarray:
     """(n × dim) int64 matrix of floor(x·scale + 0.5) — ``quantize_plane``
-    applied to a batch of vectors."""
-    m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-    return np.floor(m * float(scale) + 0.5).astype(np.int64)
+    applied to a batch of vectors. Raises ``QuantizedRangeError`` unless
+    dim · max|q|² < 2⁵³: by Cauchy-Schwarz that bounds every squared norm
+    and every dot between two such vectors, so no int64 product wraps."""
+    m = np.floor(
+        np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+        * float(scale) + 0.5
+    )
+    peak = float(np.abs(m).max()) if m.size else 0.0
+    reach = m.shape[1] * int(peak) ** 2 if np.isfinite(peak) else peak
+    if not reach < EXACT_DOT_BOUND:  # NaN included
+        raise QuantizedRangeError(
+            f"quantized vectors (scale {scale}) reach dim · max|q|² = "
+            f"{reach}; the exactness bound is 2⁵³ = {EXACT_DOT_BOUND}"
+        )
+    return m.astype(np.int64)
 
 
 def int_sigs_udf(dim: int, bits: int, tables: int, seed: int = 42):

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import re
 import sys
+import uuid
 
 from telemetry_parquet_spark.plans.explain import formatted_plan
 
@@ -55,7 +56,9 @@ def runtime_row(spark, name: str, fn, sf_dir: str) -> str:
     would depend on whether the checkout ran the audit before."""
     fn(spark, sf_dir).count()
     sc = spark.sparkContext
-    group = f"plan-audit-{name}"
+    # the status tracker keeps a group's jobs for the application's
+    # lifetime: a reused id would add this run to every earlier one
+    group = f"plan-audit-{name}-{uuid.uuid4().hex}"
     sc.setJobGroup(group, name, False)
     try:
         fn(spark, sf_dir).count()
@@ -196,7 +199,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
     print("  histograms (domain-sized, the documented vocab-sized-state")
     print("  pattern), not rows; its nested-loops are the 1-row")
     print("  total-count attach-a-scalar crossJoins, one per dimension.")
-    print("  `cluster_zorder_adaptive` adds exactly one RangePartitioning")
+    print("  `cluster_zorder` adds exactly one RangePartitioning")
     print("  exchange: the write layout itself.")
     print("- `ts_hypertable_rollup`'s three grouping levels cost ONE")
     print("  corpus-sized exchange (the hour agg); the day and week aggs")

@@ -1102,8 +1102,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _spread16_sql(col: str) -> str:
-    """DuckDB replay of layout._spread16 — textually expanded (x | x<<s)&m
-    chain; exact integer arithmetic, so the oracle matches bit-for-bit."""
+    """DuckDB spread of the low 16 bits to the even bit positions by the
+    classic parallel-bit-spread magic numbers — a construction independent
+    of ``layout.zorder_code``'s per-bit loop, so parity proves the two
+    agree bit for bit."""
     e = f"(CAST({col} AS BIGINT) & 65535)"
     for shift, mask in ((8, 0x00FF00FF), (4, 0x0F0F0F0F), (2, 0x33333333),
                         (1, 0x55555555)):
@@ -1130,7 +1132,7 @@ def zorder_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.select(
         "l_orderkey",
         "l_linenumber",
-        zorder_code("l_partkey", "l_suppkey").alias("zcode"),
+        zorder_code(["l_partkey", "l_suppkey"], 16).alias("zcode"),
     )
 
 

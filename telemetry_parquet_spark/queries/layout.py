@@ -13,8 +13,8 @@ _BITS = 8
 
 
 def _interleave_sql(bx: str, by: str, bits: int = _BITS) -> str:
-    """Unrolled Morton interleave as ANSI SQL — value-identical to
-    sources/layout.py's spread16 construction for <=16-bit inputs."""
+    """Unrolled Morton interleave as ANSI SQL — the term-for-term
+    replay of sources/layout.py's ``zorder_code`` loop for two columns."""
     terms = []
     for i in range(bits):
         terms.append(f"((({bx} >> {i}) & 1) << {2 * i})")
@@ -54,8 +54,7 @@ def layout_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     adaptive sibling of the raw-bit `zorder_codes`; buckets make the curve
     meaningful on wide/skewed domains where raw low bits are noise). The
     corpus never shuffles — both bucket maps are domain-sized broadcast
-    joins; the oracle replays the identical integer math in DuckDB (the
-    unrolled interleave == the spread16 construction for 8-bit buckets)."""
+    joins; the oracle replays the identical integer math in DuckDB."""
     from telemetry_parquet_spark.sources.layout import rank_bucket_map, zorder_code
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -74,9 +73,7 @@ def layout_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_linenumber",
             "bucket_part",
             "bucket_supp",
-            zorder_code(
-                F.col("bucket_part"), F.col("bucket_supp")
-            ).cast("long").alias("zval"),
+            zorder_code(["bucket_part", "bucket_supp"], _BITS).alias("zval"),
         )
     )
 
@@ -236,7 +233,7 @@ def scan_planned_zorder_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     data = ensure_zorder_dataset(
         spark, src,
         "zorder_lineitem_" + os.path.basename(sf_dir.rstrip("/")),
-        x="l_partkey", y="l_suppkey",
+        cols=["l_partkey", "l_suppkey"],
     )
     files = read_parquet(spark, data)
     b = files.agg(
@@ -265,7 +262,7 @@ def scan_planned_zorder_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     "scan_planned_zorder3_ranges",
     # oracle = the plain full-scan triple-range filter; the Spark side
     # serves it through the planner over a 3-COLUMN z-order layout
-    # (stride-3 Morton interleave, zorder_code_n) and RAISES unless all
+    # (stride-3 Morton interleave, zorder_code) and RAISES unless all
     # THREE columns' min/max stats prune independently — the n-column
     # generalization the 2-D module promised, proven engaged.
     oracle="""
@@ -299,7 +296,7 @@ def scan_planned_zorder3_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math as _math
     import os
 
-    from telemetry_parquet_spark.sources.layout import ensure_zorder_dataset_n
+    from telemetry_parquet_spark.sources.layout import ensure_zorder_dataset
     from telemetry_parquet_spark.sources.scan_planner import (
         Range,
         build_minmax_file_stats,
@@ -308,10 +305,10 @@ def scan_planned_zorder3_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cols = ["l_partkey", "l_suppkey", "l_orderkey"]
     src = os.path.join(sf_dir, "lineitem.parquet")
-    data = ensure_zorder_dataset_n(
+    data = ensure_zorder_dataset(
         spark, src,
         "zorder3_lineitem_" + os.path.basename(sf_dir.rstrip("/")),
-        cols=cols,
+        cols=cols, bits=6,
     )
     files = read_parquet(spark, data)
     b = files.agg(

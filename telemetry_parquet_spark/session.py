@@ -23,12 +23,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _driver_memory() -> str:
+    """16 GiB, capped at half of physical RAM: a heap larger than the host
+    lets the JVM die mid-job instead of spilling."""
+    half_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(16 * 1024, half_mib)}m"
+
+
 DEFAULT_CONF: dict[str, str] = {
     # local-mode the driver JVM IS the executor: the 1g default heap makes
     # 32 concurrent tasks spill constantly (localCheckpoint blocks fall out
     # of MemoryStore at a few MiB each). Takes effect only when this factory
     # creates the JVM; a pre-existing session keeps its own sizing.
-    "spark.driver.memory": "16g",
+    "spark.driver.memory": _driver_memory(),
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",

@@ -524,15 +524,13 @@ def write_partitioned_files(
         *[spark_transform(f).alias(c) for f, c in zip(fields, pt_cols)],
     )
     if zorder_cols:
-        from telemetry_parquet_spark.sources.layout import (
-            zorder_key_adaptive_n,
-        )
+        from telemetry_parquet_spark.sources.layout import zorder_key
 
         # the sort leads with the partition columns: partitionBy's
         # writer requires task rows ordered by them and would insert
         # its OWN sort otherwise, destroying the zval order
         staged = (
-            zorder_key_adaptive_n(staged, zorder_cols, bits=bits)
+            zorder_key(staged, zorder_cols, bits)
             .repartition(*[F.col(c) for c in pt_cols])
             .sortWithinPartitions(*pt_cols, "zval")
             .drop("zval")

@@ -2434,7 +2434,7 @@ def compact_table(
 
     With ``zorder_cols`` this is OPTIMIZE ZORDER: rows are laid out along
     the stride-n Morton curve of those columns
-    (``layout.py::zorder_key_adaptive_n`` — equal-frequency buckets, fact
+    (``layout.py::cluster_zorder`` — equal-frequency buckets, fact
     table never shuffles for its bucket keys) via ONE range shuffle, so
     every column's per-file min/max envelope tightens at once and a
     subsequent ``plan_snapshot_scan`` prunes on all of them — the layout
@@ -2481,16 +2481,9 @@ def compact_table(
             {**meta, "partitions": parts},
         )
     if zorder_cols:
-        from telemetry_parquet_spark.sources.layout import (
-            zorder_key_adaptive_n,
-        )
+        from telemetry_parquet_spark.sources.layout import cluster_zorder
 
-        rows = (
-            zorder_key_adaptive_n(rows, zorder_cols, bits=bits)
-            .repartitionByRange(n_files, F.col("zval"))
-            .sortWithinPartitions("zval")
-            .drop("zval")
-        )
+        rows = cluster_zorder(rows, zorder_cols, n_files, bits)
         action = "compact-zorder"
     else:
         rows = rows.repartition(n_files)
@@ -2555,16 +2548,9 @@ def compact_where(
         )
         n_files = max(1, -(-total // int(target_bytes)))
         if zorder_cols:
-            from telemetry_parquet_spark.sources.layout import (
-                zorder_key_adaptive_n,
-            )
+            from telemetry_parquet_spark.sources.layout import cluster_zorder
 
-            rows = (
-                zorder_key_adaptive_n(rows, zorder_cols, bits=bits)
-                .repartitionByRange(n_files, F.col("zval"))
-                .sortWithinPartitions("zval")
-                .drop("zval")
-            )
+            rows = cluster_zorder(rows, zorder_cols, n_files, bits)
         else:
             rows = rows.repartition(n_files)
         new = _write_commit_files(rows, root, f"c{parent + 1:06d}")

@@ -116,6 +116,24 @@ def test_default_local_dir(monkeypatch, tmp_path):
         assert got is None
 
 
+def test_driver_memory_capped_at_half_of_ram(monkeypatch):
+    """The default driver heap is 16 GiB, capped at half of physical RAM
+    (read through os.sysconf, so no JVM starts here)."""
+    import os
+
+    from telemetry_parquet_spark import session as S
+
+    def fake(pages):
+        return lambda name: {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": pages}[name]
+
+    monkeypatch.setattr(os, "sysconf", fake(15 * 2**30 // 4096))  # 15 GiB
+    assert S._driver_memory() == "7680m"
+    monkeypatch.setattr(os, "sysconf", fake(64 * 2**30 // 4096))  # 64 GiB
+    assert S._driver_memory() == "16384m"
+    monkeypatch.undo()
+    assert S.DEFAULT_CONF["spark.driver.memory"] == S._driver_memory()
+
+
 def test_sweep_dead_session_dirs(tmp_path):
     """r14 (ADVICE r13): stale pid-scoped scratch dirs from dead sessions
     are removed at session creation; live-pid dirs, our own dir, and

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from telemetry_parquet_spark.datapipe.retrieval import bm25_top_k
 from telemetry_parquet_spark.datapipe.similarity import (
     MAX_QUERY_BATCH,
+    QuantizedRangeError,
     QueryBatchTooLarge,
     int_sigs_udf,
     lsh_probe_matmul_top_k,
@@ -142,6 +143,29 @@ def test_matmul_batch_top_k_bounds_the_query_batch(spark):
     # exactly at the bound the batch is accepted
     ok = matmul_batch_top_k(queries.limit(MAX_QUERY_BATCH), corpus, k=1)
     assert ok.count() == MAX_QUERY_BATCH
+
+
+def test_matmul_batch_top_k_refuses_inexact_components(spark):
+    """A component of 100 quantizes to 10⁸, and 2 · (10⁸)² >= 2⁵³: the
+    int64 dots would no longer be exact, so the kernel raises the named
+    error, on the driver-side query batch and in the corpus scan alike,
+    instead of wrapping silently. Unit-scale vectors still pass."""
+    unit = [(0, [1.0, 0.0]), (1, [0.6, 0.8]), (2, [0.0, -1.0])]
+    corpus = spark.createDataFrame(unit, ["vec_id", "embedding"])
+    queries = corpus.select(F.col("vec_id").alias("query_id"), "embedding")
+    got = matmul_batch_top_k(queries, corpus, k=1, exclude_self=True)
+    assert {(r.query_id, r.vec_id) for r in got.collect()} == {
+        (0, 1), (1, 0), (2, 0)
+    }
+
+    big = spark.createDataFrame(
+        unit + [(3, [1.0, 100.0])], ["vec_id", "embedding"]
+    )
+    big_q = big.select(F.col("vec_id").alias("query_id"), "embedding")
+    with pytest.raises(QuantizedRangeError, match="9007199254740992"):
+        matmul_batch_top_k(big_q, corpus, k=1)
+    with pytest.raises(Exception, match="QuantizedRangeError"):
+        matmul_batch_top_k(queries, big, k=1).collect()
 
 
 def test_lsh_knn_graph_finds_planted_twins(spark):

@@ -1,7 +1,7 @@
 """Z-order layout: the data-skipping property, proven from parquet footers.
 
 Min/max skipping is only as good as the per-file value rectangles. After
-``cluster_zorder`` on (x, y), BOTH columns' per-file ranges must shrink to
+``cluster_zorder`` on [x, y], BOTH columns' per-file ranges must shrink to
 a fraction of the domain; a linear sort narrows only its own column.
 """
 
@@ -48,7 +48,7 @@ def test_zorder_narrows_both_columns(spark, tmp_path):
     linear = str(tmp_path / "linear")
     zordered = str(tmp_path / "zorder")
     df.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(linear)
-    cluster_zorder(df, "x", "y", num_partitions=16).write.parquet(zordered)
+    cluster_zorder(df, ["x", "y"], 16, 8).write.parquet(zordered)
 
     lin = _file_ranges(linear, ("x", "y"))
     zo = _file_ranges(zordered, ("x", "y"))
@@ -70,7 +70,7 @@ def test_zorder_code_locality(spark):
         spark.range(1000)
         .select(
             zorder_code(
-                (F.col("id") % 256), ((F.col("id") * 7) % 256)
+                [F.col("id") % 256, (F.col("id") * 7) % 256], 16
             ).alias("z"),
             (F.col("id") % 256).alias("x"),
             ((F.col("id") * 7) % 256).alias("y"),
@@ -100,13 +100,11 @@ def _morton_py(x: int, y: int, bits: int = 8) -> int:
 
 
 def test_adaptive_key_matches_python_reference_and_is_bijective(spark):
-    from telemetry_parquet_spark.sources.layout import zorder_code
-
     df = (
         spark.range(256)
         .withColumnRenamed("id", "x")
         .crossJoin(spark.range(0, 256, 17).withColumnRenamed("id", "y"))
-        .withColumn("z", zorder_code(F.col("x"), F.col("y")))
+        .withColumn("z", zorder_code(["x", "y"], 8))
     )
     n = df.count()
     assert df.select("z").distinct().count() == n  # bijective on the grid
@@ -115,16 +113,16 @@ def test_adaptive_key_matches_python_reference_and_is_bijective(spark):
 
 
 def test_adaptive_key_covers_every_row_deterministically(spark, sf_dir):
-    from telemetry_parquet_spark.sources.layout import zorder_key_adaptive
+    from telemetry_parquet_spark.sources.layout import zorder_key
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    keyed = zorder_key_adaptive(li, "l_partkey", "l_suppkey")
+    keyed = zorder_key(li, ["l_partkey", "l_suppkey"])
     stats = keyed.agg(
         F.min("zval").alias("lo"), F.max("zval").alias("hi"), F.count("*").alias("n")
     ).collect()[0]
     assert stats.n == li.count()  # broadcast joins drop/duplicate nothing
     assert 0 <= stats.lo and stats.hi < (1 << 16)
-    again = zorder_key_adaptive(li, "l_partkey", "l_suppkey")
+    again = zorder_key(li, ["l_partkey", "l_suppkey"])
     assert (
         keyed.select("l_orderkey", "l_linenumber", "zval")
         .exceptAll(again.select("l_orderkey", "l_linenumber", "zval"))
@@ -163,8 +161,6 @@ def test_adaptive_layout_prunes_both_dimensions(spark, sf_dir, tmp_path):
     predicate per dimension) is the robust comparison — on the combined
     two-dim box the layouts tie at this tiny SF (suppkey has only 10
     distinct values, so a 40–60% box spans a fifth of the y domain)."""
-    from telemetry_parquet_spark.sources.layout import cluster_zorder_adaptive
-
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"
     )
@@ -176,7 +172,7 @@ def test_adaptive_layout_prunes_both_dimensions(spark, sf_dir, tmp_path):
         .sortWithinPartitions("l_partkey")
         .write.parquet(single)
     )
-    cluster_zorder_adaptive(li, "l_partkey", "l_suppkey", num_files=n_files).write.parquet(zpath)
+    cluster_zorder(li, ["l_partkey", "l_suppkey"], n_files).write.parquet(zpath)
 
     lo_p, hi_p = li.approxQuantile("l_partkey", [0.4, 0.6], 0.0)
     lo_s, hi_s = li.approxQuantile("l_suppkey", [0.4, 0.6], 0.0)
@@ -226,21 +222,28 @@ def test_quantile_buckets_monotonic_and_balanced(spark, sf_dir):
 
 
 def test_auto_mode_matches_exact_on_small_domain(spark, sf_dir):
-    """AUTO keying on two vocabulary-sized columns must equal the exact
-    rank-CDF keying bit-for-bit (auto picks exact under the threshold)."""
-    from telemetry_parquet_spark.sources.layout import zorder_key_adaptive
+    """Keying two vocabulary-sized columns must equal the exact rank-CDF
+    keying bit-for-bit (the regime probe picks exact under the
+    threshold): ``zval`` equals a driver-side interleave of the two
+    collected ``rank_bucket_map`` tables."""
+    from telemetry_parquet_spark.sources.layout import (
+        rank_bucket_map,
+        zorder_key,
+    )
     from telemetry_parquet_spark.sources.tables import load_table
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"
     )
-    auto = zorder_key_adaptive(li, "l_partkey", "l_suppkey", bits=8)
-    exact = zorder_key_adaptive(
-        li, "l_partkey", "l_suppkey", bits=8, mode="exact"
-    )
+    auto = zorder_key(li, ["l_partkey", "l_suppkey"], 8)
+    bp = {r.v: r.bucket for r in rank_bucket_map(li, "l_partkey", 8).collect()}
+    bs = {r.v: r.bucket for r in rank_bucket_map(li, "l_suppkey", 8).collect()}
     key = ["l_orderkey", "l_linenumber"]
     a = {tuple(r[k] for k in key): r["zval"] for r in auto.collect()}
-    e = {tuple(r[k] for k in key): r["zval"] for r in exact.collect()}
+    e = {
+        tuple(r[k] for k in key): _morton_py(bp[r.l_partkey], bs[r.l_suppkey])
+        for r in li.collect()
+    }
     assert a == e
 
 
@@ -248,26 +251,15 @@ def test_zorder3_prunes_all_three_dimensions(spark, sf_dir, tmp_path):
     """The n-column generalization's payoff: after a stride-3 Morton
     layout on (l_partkey, l_suppkey, l_orderkey), a HALF-domain predicate
     on EACH column prunes files — where a single-column sort prunes only
-    its own axis. Also pins zorder_code_n's packing against a Python
+    its own axis. Also pins zorder_code's packing against a Python
     recomputation."""
-    from telemetry_parquet_spark.sources.layout import (
-        zorder_code_n,
-        zorder_key_adaptive_n,
-    )
-
     cols = ["l_partkey", "l_suppkey", "l_orderkey"]
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_linenumber", *cols
     )
     n_files = 32
     zpath = str(tmp_path / "z3")
-    (
-        zorder_key_adaptive_n(li, cols, bits=6)
-        .repartitionByRange(n_files, "zval")
-        .sortWithinPartitions("zval")
-        .drop("zval")
-        .write.parquet(zpath)
-    )
+    cluster_zorder(li, cols, n_files, 6).write.parquet(zpath)
     # per-axis half-domain boxes (cut at 0.55 to sit clear of the median
     # boundary value; see scan_planned_zorder3_ranges)
     hits = {}
@@ -280,7 +272,7 @@ def test_zorder3_prunes_all_three_dimensions(spark, sf_dir, tmp_path):
     # packing: interleave equals a driver-side recomputation
     rows = [(5, 9, 63), (0, 0, 0), (63, 1, 32)]
     df = spark.createDataFrame(rows, ["a", "b", "c"])
-    got = [r.z for r in df.select(zorder_code_n(["a", "b", "c"], 6).alias("z")).collect()]
+    got = [r.z for r in df.select(zorder_code(["a", "b", "c"], 6).alias("z")).collect()]
     def pyz(a, b, c):
         z = 0
         for i in range(6):

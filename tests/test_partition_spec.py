@@ -465,9 +465,7 @@ def test_compact_zorder_within_partitions(spark, tmp_path):
     """OPTIMIZE ZORDER under a spec: tuples survive (one file per
     tuple), and within each file rows are z-sorted on the z-columns —
     partition pruning picks files, row-group stats prune inside them."""
-    from telemetry_parquet_spark.sources.layout import (
-        zorder_key_adaptive_n,
-    )
+    from telemetry_parquet_spark.sources.layout import zorder_key
 
     root = str(tmp_path / "zin")
     df = _frame(spark, 600)
@@ -483,8 +481,8 @@ def test_compact_zorder_within_partitions(spark, tmp_path):
     assert read_snapshot(spark, root).count() == 600
     # within-file z-ordering: recompute zval over the whole table, then
     # check each file's rows are non-decreasing in it
-    keyed = zorder_key_adaptive_n(
-        read_snapshot(spark, root), ["cust", "k"], bits=8
+    keyed = zorder_key(
+        read_snapshot(spark, root), ["cust", "k"], 8
     ).select("k", "zval").collect()
     zval_of = {r.k: r.zval for r in keyed}
     for f in m["files"]:

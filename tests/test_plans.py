@@ -156,23 +156,36 @@ def test_zorder_key_is_broadcast_only(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_zorder_adaptive_high_card_fact_path_windowless(spark, sf_dir):
-    """cluster_zorder_adaptive in the high-cardinality regime: the
+def test_zorder_adaptive_high_card_fact_path_windowless(
+    spark, sf_dir, monkeypatch
+):
+    """cluster_zorder in the high-cardinality regime: the
     boundary-bucket keying is a pure projection — the plan must contain NO
     window at all and NO single-partition exchange (the exact rank-CDF's
     one-reducer cumulative sum must not appear anywhere near the fact
     path). The only exchange is the write layout's range partitioning."""
-    from telemetry_parquet_spark.sources.layout import cluster_zorder_adaptive
+    from telemetry_parquet_spark.sources import layout
     from telemetry_parquet_spark.sources.tables import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
-    # exact_max_distinct=1 forces AUTO to classify both columns (a
-    # near-unique price and a vocabulary-sized key) as high-cardinality
-    df = cluster_zorder_adaptive(
-        li, "l_extendedprice", "l_partkey", num_files=8, exact_max_distinct=1,
-        mode="auto",
-    )
+    # EXACT_MAX_DISTINCT = 1 makes the regime probe classify both columns
+    # (a near-unique price and a vocabulary-sized key) as high-cardinality
+    monkeypatch.setattr(layout, "EXACT_MAX_DISTINCT", 1)
+    df = layout.cluster_zorder(li, ["l_extendedprice", "l_partkey"], 8)
     plan = formatted_plan(df)
     assert "Window" not in plan
     assert "SinglePartition" not in plan
     assert exchange_count(df) == 1  # the range layout itself
+
+
+def test_runtime_row_counts_each_call_alone(spark, sf_dir):
+    """Two audits of one query in one session report the same counts: each
+    call reads only its own job group, never the sum of every earlier
+    run's jobs."""
+    from telemetry_parquet_spark.plans.audit import runtime_row
+
+    fn = QUERIES["q6_forecast_revenue"]
+    first = runtime_row(spark, "q6_forecast_revenue", fn, sf_dir)
+    second = runtime_row(spark, "q6_forecast_revenue", fn, sf_dir)
+    assert first.startswith("runtime-measured: ")
+    assert first == second
