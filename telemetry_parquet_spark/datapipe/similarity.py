@@ -434,7 +434,9 @@ def lsh_probe_matmul_top_k(
         )
         tag = tag.repartition(n_parts, "__tbl", "__sig")
 
-        def rescore_self(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        # no type hints: partial ones make applyInPandas warn that it
+        # cannot infer the eval type, on every call
+        def rescore_self(key, pdf):
             c_pdf = pdf[pdf["__cand"]]
             return _score_block(
                 pdf[vec_col], pdf[corpus_id].to_numpy(dtype=np.int64),

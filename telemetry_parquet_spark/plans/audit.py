@@ -137,7 +137,12 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
     queries = all_queries()
     print("# PLANS — physical-plan audit of the bench headline set")
     print()
-    print(f"Generated by `python -m telemetry_parquet_spark.plans.audit` at {sf_dir}.")
+    sc = spark.sparkContext
+    # runtime task counts follow the local thread count
+    print(
+        f"Generated by `python -m telemetry_parquet_spark.plans.audit` at {sf_dir}, "
+        f"master `{sc.master}`, defaultParallelism {sc.defaultParallelism}."
+    )
     print("Shuffles = shuffle Exchanges (broadcast exchanges excluded);")
     print("pushdown = scans whose PushedFilters is non-empty; read_cols =")
     print("distinct parquet columns in ReadSchema (column-pruning proof).")

@@ -31,6 +31,10 @@ def _driver_memory() -> str:
     return f"{min(16 * 1024, half_mib)}m"
 
 
+# The directory that holds this package. Python workers import the daemon
+# module below from it, whatever the JVM's cwd.
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 DEFAULT_CONF: dict[str, str] = {
     # local-mode the driver JVM IS the executor: the 1g default heap makes
     # 32 concurrent tasks spill constantly (localCheckpoint blocks fall out
@@ -58,6 +62,12 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.hadoop.parquet.block.size": str(256 * 1024 * 1024),
     "spark.ui.showConsoleProgress": "false",
     "spark.ui.enabled": "false",
+    # pyspark.daemon without the ~112 ms per task that re-reading Spark's
+    # own zip/jar archives costs (see pyworker.py). PySpark appends this
+    # PYTHONPATH after $SPARK_HOME's zips; a caller who overrides it must
+    # keep PACKAGE_PARENT on it, or every Python task fails to start.
+    "spark.python.daemon.module": "telemetry_parquet_spark.pyworker",
+    "spark.executorEnv.PYTHONPATH": PACKAGE_PARENT,
 }
 
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import itertools
 import random
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -623,11 +624,12 @@ def test_lsh_self_corpus_path_equals_two_sided(spark):
                 queries, corpus, dim=dim, k=k, exclude_self=True, **cfg
             ).collect()
         )
-        one = set(
-            (r.query_id, r.vec_id, r.cos_micros)
-            for r in lsh_probe_matmul_top_k(
+        with warnings.catch_warnings():
+            # e.g. applyInPandas' "Cannot infer the eval type from type hints"
+            warnings.simplefilter("error", UserWarning)
+            one_df = lsh_probe_matmul_top_k(
                 queries, corpus.repartition(5), dim=dim, k=k,
                 exclude_self=True, self_corpus=True, **cfg
-            ).collect()
-        )
+            )
+        one = set((r.query_id, r.vec_id, r.cos_micros) for r in one_df.collect())
         assert one == two, cfg
