@@ -251,8 +251,11 @@ def _stage_into_buckets(
     ({rel_file: bucket tuple}, scratch_root, staging physical plan).
 
     The staged layout lands under the SESSION WAREHOUSE keyed by
-    (table root, resolved version, key, width, predicates) — manifests
-    are immutable at a version, so a later call with the same key
+    (table root, resolved version, the pinned manifest's
+    ``committed_at``, key, width, predicates) — manifests are immutable
+    at a version, and the commit time tells a table rebuilt at the same
+    path and version from the one staged before, so a later call with
+    the same key
     REUSES the layout and skips the shuffle entirely (the
     materialize_cached discipline; repeated joins against one dim
     version pay the exchange once). Eviction keeps the scratch bounded:
@@ -309,9 +312,12 @@ def _stage_into_buckets(
     key_sig = ",".join(
         f"{k.lower()}:{n}" for k, n in zip(keys, ns)
     )
+    # the pinned manifest's commit time tells a table deleted and
+    # rebuilt at the same path and version from the one staged before
     fp = hashlib.md5(
         (
-            f"{os.path.abspath(root)}|v{version}|{key_sig}|"
+            f"{os.path.abspath(root)}|v{version}|"
+            f"{m.get('committed_at')!r}|{key_sig}|"
             f"{sorted(repr(p) for p in predicates or [])}"
         ).encode()
     ).hexdigest()[:16]

@@ -163,6 +163,75 @@ def _encode_temporal(v):
     return None
 
 
+def _manifest_keep(m: dict, preds: list, encoded: bool = False):
+    """The one manifest-stat prune: ``keep(f)`` is False only when some
+    planner predicate (``Range``/``Eq``/``In``) in ``preds`` misses file
+    ``f``'s recorded [min, max] for its column — zero data or footer
+    I/O. A file or column without a stat is kept (unknown). Predicate
+    values are first put in the manifest's encoding unless ``encoded``
+    says they already are (``_key_probe`` ranges): temporal columns are
+    stored as integer ordinals (see _file_footer_stats), and a temporal
+    value may be a date/datetime object or an ISO string. Shared by the
+    pruned scan, the COW delete's ``scan_predicates``, the MERGE
+    key-range prune and the UNIQUE collision probe."""
+    import dataclasses
+    import datetime as _dt
+
+    from telemetry_parquet_spark.sources.scan_planner import (
+        Eq,
+        In,
+        Range,
+        _minmax_keep,
+    )
+
+    stats = m.get("stats", {})
+    kinds = m.get("stats_types", {})
+
+    def _enc(kind: str | None, val):
+        if val is None or kind not in ("date", "timestamp"):
+            return val
+        if isinstance(val, str):
+            val = (
+                _dt.datetime.fromisoformat(val)
+                if kind == "timestamp"
+                else _dt.date.fromisoformat(val)
+            )
+        if kind == "timestamp" and not isinstance(val, _dt.datetime):
+            val = _dt.datetime(val.year, val.month, val.day)
+        return _encode_temporal(val)
+
+    def _conv(p):
+        if encoded:
+            return p
+        kind = kinds.get(p.col)
+        if isinstance(p, Range):
+            return dataclasses.replace(
+                p, lo=_enc(kind, p.lo), hi=_enc(kind, p.hi)
+            )
+        if isinstance(p, Eq):
+            return dataclasses.replace(p, value=_enc(kind, p.value))
+        if isinstance(p, In):
+            return dataclasses.replace(
+                p, values=tuple(_enc(kind, v) for v in p.values)
+            )
+        return p
+
+    conv = [_conv(p) for p in preds]
+
+    def keep(f: str) -> bool:
+        st = stats.get(f, {})
+        for p in conv:
+            if p.col not in st:
+                continue  # no stats -> unknown -> keep
+            mn, mx = st[p.col]
+            row = {f"min_{p.col}": mn, f"max_{p.col}": mx}
+            if not _minmax_keep(row, p):
+                return False
+        return True
+
+    return keep
+
+
 def _file_footer_stats(path: str) -> tuple[dict, dict, dict, int]:
     """Per-column [min, max], per-column NULL counts, AND the exact row
     count from the parquet footer of ONE file — row-group stats folded.
@@ -566,29 +635,24 @@ def _validate_unique(
 ) -> dict:
     """UNIQUE-key (primary-key) enforcement for an append: the batch must
     be duplicate-free internally, non-null on every key column, and
-    disjoint from the parent's keys. The existing-side probe reads ONLY
-    the parent files whose manifest key-range envelope intersects the
-    batch's own key range — one driver-sized agg over the batch, then a
-    pruned left-semi probe — so on a key-clustered layout the whole check
-    costs ∝ the overlapping region, never the table (the merge-detection
-    discipline). Returns the per-key pruning audit that rides into the
-    commit manifest."""
+    disjoint from the parent's keys. The NULL, duplicate and key-range
+    questions share one observed pass over the batch (``_key_probe``);
+    the existing-side probe then reads ONLY the parent files whose
+    manifest key-range envelope intersects the batch's own key range —
+    a pruned left-semi probe — so on a key-clustered layout the whole
+    check costs ∝ the overlapping region, never the table (the
+    merge-detection discipline). Returns the per-key pruning audit that
+    rides into the commit manifest."""
     audit: dict[str, list[int]] = {}
     for name, cols in (m.get("unique_keys") or {}).items():
         keys = df.select(*cols)
-        null_pred = None
-        for c in cols:
-            e = F.col(c).isNull()
-            null_pred = e if null_pred is None else null_pred | e
-        if keys.where(null_pred).limit(1).count():
+        probe = _key_probe(keys, list(cols))
+        if probe["null"]:
             raise ValueError(
                 f"UNIQUE constraint '{name}' ({cols}): NULL key in new "
                 "rows; nothing committed"
             )
-        if (
-            keys.groupBy(*cols).count().where(F.col("count") > 1)
-            .limit(1).count()
-        ):
+        if probe["dup"]:
             raise ValueError(
                 f"UNIQUE constraint '{name}' ({cols}): duplicate keys "
                 "within the new rows; nothing committed"
@@ -596,34 +660,13 @@ def _validate_unique(
         if not m.get("files"):
             audit[name] = [0, 0]
             continue
-        bounds = df.agg(
-            *[F.min(c).alias(f"lo_{c}") for c in cols],
-            *[F.max(c).alias(f"hi_{c}") for c in cols],
-        ).first()
-        if all(bounds[f"lo_{c}"] is None for c in cols):
+        if probe["empty"]:
             # empty batch (all-null keys were already rejected): nothing
-            # to collide — and None bounds must never reach the < below
+            # to collide
             audit[name] = [0, len(m["files"])]
             continue
-        stats = m.get("stats", {})
-        # temporal stats are stored as encoded ordinals (epoch days /
-        # micros) — comparing them against raw batch values would be
-        # wrong, so typed columns conservatively probe
-        typed = set(m.get("stats_types", {}))
-
-        def _intersects(f: str) -> bool:
-            st = stats.get(f, {})
-            for c in cols:
-                if c not in st or c in typed:
-                    return True  # no/encoded stats -> unknown -> probe
-                mn, mx = st[c]
-                if mn is None or mx is None:
-                    return True
-                if mx < bounds[f"lo_{c}"] or mn > bounds[f"hi_{c}"]:
-                    return False
-            return True
-
-        candidates = [f for f in m["files"] if _intersects(f)]
+        keep = _manifest_keep(m, probe["ranges"], encoded=True)
+        candidates = [f for f in m["files"] if keep(f)]
         audit[name] = [len(candidates), len(m["files"])]
         if not candidates:
             continue
@@ -727,6 +770,87 @@ def _rel_file_expr(root: str, col: str = "_metadata.file_path"):
         )
         .otherwise(fp)
     )
+
+
+def _observe(df: DataFrame, *aggs) -> dict:
+    """Run ``df`` once through the ``noop`` sink and return the observed
+    aggregates ``aggs`` (by alias): one pass, nothing collected row by
+    row. Only idempotent aggregates (``min``, ``max``, ``collect_set``)
+    may be observed here — a retried task then cannot change the
+    answer, where an observed count or sum could double. On an empty
+    (or zero-partition) input ``min``/``max`` are None and a set is
+    empty."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    df.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
+def _touched_files(root: str, paths: DataFrame) -> set[str]:
+    """Table-relative paths of the data files named in ``paths``' one
+    column (``_metadata.file_path`` values): the find-affected-files
+    pass of the COW mutators, as one observed ``collect_set``
+    (driver-sized: one entry per affected FILE) instead of a
+    distinct-and-collect."""
+    root_abs = os.path.abspath(root)
+    col = F.col(paths.columns[0])
+    got = _observe(paths, F.collect_set(col).alias("files"))
+    return {_rel_path(root_abs, p) for p in got["files"]}
+
+
+def _key_probe(df: DataFrame, keys: list[str]) -> dict:
+    """One observed pass over ``df.groupBy(keys).count()`` answering
+    every question a commit asks of its new rows' keys: ``empty`` (no
+    rows), ``null`` (some key column is NULL), ``dup`` (some key tuple
+    occurs twice) and ``ranges`` — each key's [min, max] as a planner
+    ``Range`` already in the manifest's stat encoding (DATE -> epoch
+    days, TIMESTAMP -> epoch micros, computed by Spark so no Python time
+    zone enters), for ``_manifest_keep(..., encoded=True)``. A key type
+    the manifest does not store comparably (TIMESTAMP_NTZ, decimal,
+    nested) gets no range: keep. Empty input: no null, no dup, ranges
+    open at both ends."""
+    from pyspark.sql.types import DateType, TimestampType
+
+    from telemetry_parquet_spark.sources.scan_planner import Range
+
+    types = {f.name: f.dataType for f in df.schema.fields}
+
+    def _ordinal(k: str):
+        t = types[k]
+        if isinstance(t, DateType):
+            return F.unix_date(F.col(k))
+        if isinstance(t, TimestampType):
+            return F.unix_micros(F.col(k))
+        if t.typeName() in (
+            "long", "integer", "short", "byte", "double", "float",
+            "string", "boolean",
+        ):
+            return F.col(k)
+        return None
+
+    any_null = None
+    for k in keys:
+        e = F.col(k).isNull()
+        any_null = e if any_null is None else any_null | e
+    ords = {k: _ordinal(k) for k in keys}
+    bounded = [k for k in keys if ords[k] is not None]
+    got = _observe(
+        df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n")),
+        F.max(F.col("__n")).alias("__maxn"),
+        F.max(any_null).alias("__null"),
+        *[F.min(ords[k]).alias(f"__lo{i}") for i, k in enumerate(bounded)],
+        *[F.max(ords[k]).alias(f"__hi{i}") for i, k in enumerate(bounded)],
+    )
+    return {
+        "empty": got["__maxn"] is None,
+        "null": bool(got["__null"]),
+        "dup": (got["__maxn"] or 0) > 1,
+        "ranges": [
+            Range(k, got[f"__lo{i}"], got[f"__hi{i}"])
+            for i, k in enumerate(bounded)
+        ],
+    }
 
 
 # every deletion-vector file's layout: the (__file, __pos) pair
@@ -1770,49 +1894,24 @@ def _cow_delete(
     (NULL predicate = no match); the rest carry over by reference, and
     only the affected files are read again and rewritten under ``tag``
     without the matching rows. ``scan_predicates`` first prune the
-    detection scan by per-file min/max stats (``delete_where``'s
-    contract). Returns (the new file list, candidate files scanned)."""
+    detection scan by the manifest's per-file min/max stats
+    (``delete_where``'s contract). Returns (the new file list, candidate
+    files scanned)."""
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     hit = F.coalesce(pred, F.lit(False))
     schema = StructType.fromJson(json.loads(m["schema"]))
-    root_abs = os.path.abspath(root)
-
-    def _rel(p: str) -> str:
-        return _rel_path(root_abs, p)
-
     candidates = list(m["files"])
     if scan_predicates:
-        from telemetry_parquet_spark.sources.scan_planner import (
-            build_minmax_file_stats,
-            _minmax_keep,
-        )
-
-        head = spark.read.schema(schema).parquet(
-            *[os.path.join(root, f) for f in candidates]
-        )
-        cols = sorted({p.col for p in scan_predicates})
-        stats = {
-            _rel(r.file_path): r
-            for r in build_minmax_file_stats(head, cols).collect()
-        }
-        candidates = [
-            f
-            for f in candidates
-            if f not in stats
-            or all(_minmax_keep(stats[f], p) for p in scan_predicates)
-        ]
+        keep = _manifest_keep(m, scan_predicates)
+        candidates = [f for f in candidates if keep(f)]
     if not candidates:
         return list(m["files"]), 0
     scan = spark.read.schema(schema).parquet(
         *[os.path.join(root, f) for f in candidates]
     )
-    affected = {
-        _rel(r.file_path)
-        for r in scan.where(hit)
-        .select(F.col("_metadata.file_path").alias("file_path"))
-        .distinct()
-        .collect()
-    }
+    affected = _touched_files(
+        root, scan.where(hit).select("_metadata.file_path")
+    )
     carried = [f for f in m["files"] if f not in affected]
     rewrite = [f for f in m["files"] if f in affected]
     if affected and not rewrite:
@@ -1870,48 +1969,28 @@ def delete_where(
     )
 
 
-def _key_range_candidates(
-    spark: SparkSession,
-    root: str,
+def _merge_candidates(
     m: dict,
-    schema: StructType,
     source: DataFrame,
     keys: list[str],
+    op: str,
+    prune_by_key_range: bool,
 ) -> list[str]:
-    """Files that can possibly hold a key match for a MERGE: the
-    SOURCE's own key min/max envelope (one 1-row agg) intersected with
-    per-file key stats (one map-side build). Exact with no caller
-    contract — a file whose envelope misses every source key cannot
-    hold a match. Shared by merge_into and merge_into_conditional so
-    the prune can never diverge between the two MERGE paths."""
-    from telemetry_parquet_spark.sources.scan_planner import (
-        Range,
-        _minmax_keep,
-        build_minmax_file_stats,
-    )
-
-    root_abs = os.path.abspath(root)
-    candidates = list(m["files"])
-    bounds = source.agg(
-        *[F.min(k).alias(f"lo_{k}") for k in keys],
-        *[F.max(k).alias(f"hi_{k}") for k in keys],
-    ).first()
-    ranges = [
-        Range(k, bounds[f"lo_{k}"], bounds[f"hi_{k}"]) for k in keys
-    ]
-    head = spark.read.schema(schema).parquet(
-        *[os.path.join(root, f) for f in candidates]
-    )
-    stats = {
-        _rel_path(root_abs, r.file_path): r
-        for r in build_minmax_file_stats(head, keys).collect()
-    }
-    return [
-        f
-        for f in candidates
-        if f not in stats
-        or all(_minmax_keep(stats[f], p) for p in ranges)
-    ]
+    """The one source-key probe of both MERGE paths, so the check and
+    the prune can never diverge between them. One observed pass
+    (``_key_probe``) refuses duplicate source keys (the standard MERGE
+    cardinality rule) and yields the source's key envelope; with
+    ``prune_by_key_range`` the files whose manifest key stats miss that
+    envelope are dropped from the detection scan — exact with no caller
+    contract, since a file whose envelope misses every source key
+    cannot hold a match. Returns the candidate files."""
+    probe = _key_probe(source.select(*keys), list(keys))
+    if probe["dup"]:
+        raise ValueError(f"{op}: source has duplicate merge keys")
+    if not prune_by_key_range:
+        return list(m["files"])
+    keep = _manifest_keep(m, probe["ranges"], encoded=True)
+    return [f for f in m["files"] if keep(f)]
 
 
 def merge_into(
@@ -1937,18 +2016,20 @@ def merge_into(
     keeps the pre-merge version readable.
 
     ``prune_by_key_range`` (default on) bounds even the detection
-    semi-join: the SOURCE's own key min/max (one 1-row agg) intersected
-    with per-file key envelopes (one map-side stats build) prunes the
-    files scanned for matches — derived from the data, so it needs no
-    caller contract and is always exact (a file whose key envelope misses
-    every source key cannot hold a match). On a key-clustered layout the
-    whole merge costs ∝ the source's key range. The commit records
+    semi-join: the SOURCE's own key min/max intersected with the
+    manifest's per-file key stats prunes the files scanned for matches
+    — derived from the data, so it needs no caller contract and is
+    always exact (a file whose key envelope misses every source key
+    cannot hold a match). On a key-clustered layout the whole merge
+    costs ∝ the source's key range. The commit records
     ``scan_candidates``/``scanned`` for audit.
 
     Contract: ``source`` has the table's columns and at most one row per
     key (the standard MERGE cardinality rule — two source rows for one
     target key would make the update ambiguous; enforced with a loud
-    error, driver-sized check is a 1-row agg)."""
+    error). The duplicate check and the key envelope share one observed
+    pass over the source's keys (``_merge_candidates``), and the
+    affected files come from one observed pass over the semi-join."""
     parent = latest_version(root)
     m = read_manifest(root, parent)
     _require_no_dv(m, "merge_into")
@@ -1979,41 +2060,27 @@ def merge_into(
     source = source.select(*[f.name for f in evolved.fields])
     _check_column_types(source, schema, "merge_into")
     _validate_constraints(source, m.get("constraints"))
-    dup = (
-        source.groupBy(*keys).count().where(F.col("count") > 1).limit(1).count()
+    candidates = _merge_candidates(
+        m, source, keys, "merge_into", prune_by_key_range
     )
-    if dup:
-        raise ValueError("merge_into: source has duplicate merge keys")
     if not m["files"]:
         new = _write_commit_files(source, root, f"c{parent + 1:06d}")
         return _commit(
             root, "merge", new, schema_json_out, parent, _carry_meta(m)
         )
-    root_abs = os.path.abspath(root)
-
-    def _rel(p: str) -> str:
-        return _rel_path(root_abs, p)
-
-    candidates = (
-        _key_range_candidates(spark, root, m, schema, source, keys)
-        if prune_by_key_range
-        else list(m["files"])
-    )
     affected = set()
     if candidates:
         scan = spark.read.schema(schema).parquet(
             *[os.path.join(root, f) for f in candidates]
         )
-        affected = {
-            _rel(r.file_path)
-            for r in scan.select(
+        affected = _touched_files(
+            root,
+            scan.select(
                 F.col("_metadata.file_path").alias("file_path"), *keys
             )
             .join(source.select(*keys), on=keys, how="left_semi")
-            .select("file_path")
-            .distinct()
-            .collect()
-        }
+            .select("file_path"),
+        )
     carried = [f for f in m["files"] if f not in affected]
     rewrite = [f for f in m["files"] if f in affected]
     if affected and not rewrite:
@@ -2165,8 +2232,9 @@ def merge_into_conditional(
       holds (keep-newest with mostly-stale sources) rewrites almost
       nothing even when every key matches;
     - ``prune_by_key_range`` bounds the detection join by the source's
-      own key envelope vs per-file min/max (files outside the envelope
-      cannot hold a match — exact, no caller contract);
+      own key envelope vs the manifest's per-file min/max (files
+      outside the envelope cannot hold a match — exact, no caller
+      contract);
     - untouched files carry by reference; the pre-merge version stays
       readable (time travel).
 
@@ -2226,14 +2294,9 @@ def merge_into_conditional(
                     )
     _check_column_types(source, schema, "merge_into_conditional")
     _validate_constraints(source, m.get("constraints"))
-    dup = (
-        source.groupBy(*keys).count().where(F.col("count") > 1)
-        .limit(1).count()
+    candidates = _merge_candidates(
+        m, source, keys, "merge_into_conditional", prune_by_key_range
     )
-    if dup:
-        raise ValueError(
-            "merge_into_conditional: source has duplicate merge keys"
-        )
     audit_base = {"matched_clauses": [a for a, _ in matched_clauses],
                   "insert": bool(not_matched_insert),
                   **({"by_source_clauses": [c[0] for c in bs_clauses]}
@@ -2249,17 +2312,6 @@ def merge_into_conditional(
         new = _write_commit_files(ins, root, f"c{parent + 1:06d}")
         return _commit(root, "merge", new, m["schema"], parent,
                        {**_carry_meta(m), **audit_base})
-    root_abs = os.path.abspath(root)
-
-    def _rel(p: str) -> str:
-        return _rel_path(root_abs, p)
-
-    candidates = (
-        _key_range_candidates(spark, root, m, schema, source, keys)
-        if prune_by_key_range
-        else list(m["files"])
-    )
-
     srcm = source.withColumn("__s_matched", F.lit(True))
 
     def _key_cond():
@@ -2285,10 +2337,7 @@ def merge_into_conditional(
             )
             .where(F.col("__dec") != -1)
         )
-        affected = {
-            _rel(r[0])
-            for r in det.select("__fp").distinct().collect()
-        }
+        affected = _touched_files(root, det.select("__fp"))
     if bs_clauses:
         # BY-SOURCE detection: key-range pruning is INVALID here (files
         # outside the source envelope are exactly the BY-SOURCE-rich
@@ -2317,10 +2366,7 @@ def merge_into_conditional(
             .alias("t")
             .where(bs_fire)
         )
-        affected |= {
-            _rel(r[0])
-            for r in bs_det.select("__fp").distinct().collect()
-        }
+        affected |= _touched_files(root, bs_det.select("__fp"))
     carried = [f for f in m["files"] if f not in affected]
     rewrite = [f for f in m["files"] if f in affected]
     if affected and not rewrite:
@@ -2873,7 +2919,10 @@ def table_changes(
     side's LOGICAL rows (its own DVs applied) over that region, so a MOR
     delete feeds precisely the newly-deleted rows and a compaction that
     materializes DVs still cancels to empty. Cost stays file-granular:
-    non-shared files plus DV-referenced files, never the table."""
+    non-shared files plus DV-referenced files, never the table. Building
+    the feed fires no job: the DV-referenced files come from the
+    vectors' agg sidecars (a vector without one is scanned), and the
+    diff is one lazy aggregate over both sides."""
     mf = read_manifest(root, from_version)
     mt = read_manifest(root, to_version)
     schema = StructType.fromJson(json.loads(mt["schema"]))
@@ -2884,12 +2933,22 @@ def table_changes(
     dv_delta = [d for d in dv_t if d not in set(dv_f)] + [
         d for d in dv_f if d not in set(dv_t)
     ]
+    # the data files a DV delta touches come from each vector's agg
+    # sidecar (``per_file`` keys: exactly the files it masks rows of);
+    # only a vector without a format-2 sidecar is scanned for them
     dv_touched: set[str] = set()
-    if dv_delta:
-        dv_touched = {
+    unlisted = []
+    for d in dv_delta:
+        side = _read_dv_agg_sidecar(root, d)
+        if side is None or side["per_file"] is None:
+            unlisted.append(d)
+        else:
+            dv_touched.update(side["per_file"])
+    if unlisted:
+        dv_touched |= {
             r.file
             for r in read_parquet(
-                spark, [os.path.join(root, d) for d in dv_delta], DV_SCHEMA
+                spark, [os.path.join(root, d) for d in unlisted], DV_SCHEMA
             )
             .select("file")
             .distinct()
@@ -2914,11 +2973,30 @@ def table_changes(
         )
         return _read_logical(spark, root, files, schema, dv, eq)
 
+    # the multiset diff as ONE aggregate (the plan Spark's own
+    # RewriteExceptAll builds, once instead of once per direction):
+    # each side counts +1 (new) / -1 (old) per row, equal rows net out,
+    # and a row with net n != 0 is replicated |n| times as an insert
+    # (n > 0) or a delete (n < 0)
+    cols = [f.name for f in schema.fields]
     old = _side(mf["files"], f_only, dv_f, eq_f)
     new = _side(mt["files"], t_only, dv_t, eq_t)
-    inserts = new.exceptAll(old).withColumn("_change", F.lit("insert"))
-    deletes = old.exceptAll(new).withColumn("_change", F.lit("delete"))
-    return inserts.unionByName(deletes)
+    net = (
+        new.select(*cols, F.lit(1).alias("__n"))
+        .unionByName(old.select(*cols, F.lit(-1).alias("__n")))
+        .groupBy(*cols)
+        .agg(F.sum("__n").alias("__n"))
+        .where(F.col("__n") != 0)
+    )
+    return net.select(
+        *cols,
+        F.when(F.col("__n") > 0, F.lit("insert"))
+        .otherwise(F.lit("delete"))
+        .alias("_change"),
+        F.explode(
+            F.array_repeat(F.lit(0), F.abs(F.col("__n")).cast("int"))
+        ).alias("__rep"),
+    ).drop("__rep")
 
 
 def refresh_view_incremental(
@@ -3540,16 +3618,11 @@ def plan_snapshot_scan(
     and position vectors + scoped equality key sets are anti-joined out
     of the kept files only. The MOR table gets planned scans without
     waiting for compaction."""
-    import dataclasses
-    import datetime as _dt
-
     from telemetry_parquet_spark.sources.partition_spec import keep_file
     from telemetry_parquet_spark.sources.scan_planner import (
         Eq,
         In,
-        Range,
         ScanPlan,
-        _minmax_keep,
         _predicate_expr,
     )
 
@@ -3558,40 +3631,8 @@ def plan_snapshot_scan(
     if not allow_dv:
         _require_no_dv(m, "plan_snapshot_scan")
     schema = StructType.fromJson(json.loads(m["schema"]))
-    stats = m.get("stats", {})
-    stat_types = m.get("stats_types", {})
     kept = sorted(m["files"])
     plan = ScanPlan(total_files=len(kept))
-
-    def _conv(col: str, val):
-        """Predicate value → the manifest's stored encoding (temporal
-        columns are stored as integer ordinals; see _file_footer_stats).
-        Accepts date/datetime objects or ISO strings."""
-        t = stat_types.get(col)
-        if val is None or t not in ("date", "timestamp"):
-            return val
-        if isinstance(val, str):
-            val = (
-                _dt.datetime.fromisoformat(val)
-                if t == "timestamp"
-                else _dt.date.fromisoformat(val)
-            )
-        if t == "timestamp" and not isinstance(val, _dt.datetime):
-            val = _dt.datetime(val.year, val.month, val.day)
-        return _encode_temporal(val)
-
-    def _converted(p):
-        if isinstance(p, Range):
-            return dataclasses.replace(
-                p, lo=_conv(p.col, p.lo), hi=_conv(p.col, p.hi)
-            )
-        if isinstance(p, Eq):
-            return dataclasses.replace(p, value=_conv(p.col, p.value))
-        if isinstance(p, In):
-            return dataclasses.replace(
-                p, values=tuple(_conv(p.col, v) for v in p.values)
-            )
-        return p
 
     partitions = m.get("partitions") or {}
     specs = m.get("specs") or {}
@@ -3637,19 +3678,8 @@ def plan_snapshot_scan(
             kept = bloom_kept
             continue
 
-        cp = _converted(p)
-
-        def _keep(f: str) -> bool:
-            st = stats.get(f, {})
-            if cp.col not in st:
-                return True  # no stats -> unknown -> keep
-            row = {
-                f"min_{cp.col}": st[cp.col][0],
-                f"max_{cp.col}": st[cp.col][1],
-            }
-            return _minmax_keep(row, cp)
-
-        stats_kept = [f for f in kept if _keep(f)]
+        keep = _manifest_keep(m, [p])
+        stats_kept = [f for f in kept if keep(f)]
         if len(stats_kept) != len(kept) or not spec_pruned:
             plan.steps.append((f"manifest:{p.col}", len(stats_kept)))
         kept = stats_kept

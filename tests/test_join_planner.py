@@ -825,6 +825,54 @@ def test_staging_layout_is_reused_across_calls(spark, tmp_path):
     assert j3.count() == 300  # dk=99 matches no v in 0..4
 
 
+def test_staging_rebuilt_table_gets_fresh_layout(spark, tmp_path):
+    """A table deleted and rebuilt at the same path, to the same version,
+    with other rows is a different table: the join re-stages it instead
+    of reusing the old table's staged rows, and joins the new rows."""
+    import glob as _glob
+    import os as _os
+    import shutil as _shutil
+
+    from telemetry_parquet_spark.sources.join_planner import (
+        plan_bucket_join,
+    )
+    from telemetry_parquet_spark.sources.partition_spec import (
+        PartitionField,
+        set_partition_spec,
+    )
+
+    la, rb = str(tmp_path / "fa"), str(tmp_path / "rebuilt")
+    fact = spark.range(0, 300).select(
+        F.col("id").alias("k"), (F.col("id") % 5).alias("v")
+    )
+    S.append(spark, la, fact)
+    set_partition_spec(la, [PartitionField("v", "bucket", 4)])
+    S.compact_table(spark, la, target_bytes=1 << 26)
+    v1 = S.append(spark, rb, spark.createDataFrame(
+        [(0, 10), (1, 11)], "dk long, w long"))
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    if wh.startswith("file:"):
+        wh = wh[len("file:"):]
+
+    def stage_dirs():
+        return set(_glob.glob(_os.path.join(wh, "bucket_stage_*")))
+
+    before = stage_dirs()
+    j1, _ = plan_bucket_join(spark, la, rb, ("v", "dk"))
+    assert sorted(set((r.v, r.w) for r in j1.collect())) == [(0, 10), (1, 11)]
+    after1 = stage_dirs()
+    _shutil.rmtree(rb)
+    v = S.append(spark, rb, spark.createDataFrame(
+        [(2, 22), (3, 33), (4, 44)], "dk long, w long"))
+    assert v == v1  # same path, same version, other rows
+    j2, _ = plan_bucket_join(spark, la, rb, ("v", "dk"))
+    assert len(stage_dirs() - after1) == 1  # re-staged, not reused
+    assert len(after1 - before) == 1
+    got = sorted(set((r.v, r.w) for r in j2.collect()))
+    assert got == [(2, 22), (3, 33), (4, 44)]
+    assert j2.count() == 180  # 60 fact rows per v in 2..4
+
+
 def _mk_bucketed(spark, root, df, fields):
     from telemetry_parquet_spark.sources.partition_spec import (
         PartitionField,
